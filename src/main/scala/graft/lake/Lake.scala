@@ -158,7 +158,12 @@ final case class Lake(root: String, manifestCompactThreshold: Int = 64)
       // the advisory partition size — hash repartition alone would
       // serialize a hot directory. One linear shuffle per batch buys
       // a file count proportional to dirs, not dirs×tasks.
-      Lake.withMicrosTimestamps(spark) {
+      // The encoding is set on the BATCH's session: a streaming
+      // foreachBatch DataFrame belongs to the stream's cloned session,
+      // whose conf the caller's session does not reach — set there, the
+      // micro-batch would write INT96 (no footer stats, so a stats scan
+      // per batch and no time ranges until a compaction rewrite).
+      Lake.withMicrosTimestamps(batch.sparkSession) {
         batch.hint("rebalance", TpSchema.partitionCols.map(col): _*)
           .write
           .partitionBy(TpSchema.partitionCols: _*)
@@ -348,19 +353,129 @@ final case class Lake(root: String, manifestCompactThreshold: Int = 64)
       "^[a-zA-Z][a-zA-Z0-9+.-]*:/", "/"),
       "\\+", "%2B"))
 
-  /** One scan of exactly `files` → per-(file, column) stat rows
-    * appended to the sidecar: HLL sketch (int/long/string/binary
-    * natively, everything else through a string cast — NDV is
-    * cast-invariant), null count, row count, string length sums and
-    * numeric min/max as doubles (mergeable forms of avgLen/maxLen and
-    * range bounds).
+  /** Per-(file, column) stat rows for exactly `files` (path → row
+    * count) appended to the sidecar as ONE direct parquet write: HLL
+    * sketch (int/long/string/binary natively, everything else through a
+    * string cast — NDV is cast-invariant), null count, row count, string
+    * length sums and numeric min/max as doubles (mergeable forms of
+    * avgLen/maxLen and range bounds), KLL / frequent-items blobs and
+    * integral sums. Directory-valued columns are built on the driver
+    * from paths and row counts ([[partitionColStats]]); only data
+    * columns pay a scan ([[scanColStats]]).
     */
   private def appendColStats(
       spark: SparkSession, table: String,
-      files: Seq[String], allColumns: Seq[String]): Unit = {
+      files: Seq[(String, Long)], allColumns: Seq[String]): Unit = {
     if (files.isEmpty || allColumns.isEmpty) return
     val seqNo = nextSeq(spark, table)
-    val src = spark.read.option("basePath", tableDir(table))
+    val (partCols, dataCols) =
+      allColumns.partition(TpSchema.partitionCols.contains)
+    val (dirRows, unserved) =
+      partitionColStats(spark, table, files, partCols, seqNo)
+    val rows = dirRows ++
+      scanColStats(spark, table, files.map(_._1), dataCols ++ unserved, seqNo)
+    if (rows.nonEmpty) ManifestIO.writeColStats(
+      spark.sessionState.newHadoopConf(), colStatsDir(table), rows)
+  }
+
+  /** Sidecar rows for DIRECTORY-valued columns, with no scan: every row
+    * of a file shares its directory's value, so each aggregate follows
+    * from (value, row count) — `sum_v = value × n`, the sketches take
+    * one weighted update. Values are typed exactly as the scan would
+    * type them: Spark's own partition inference over the appended
+    * paths (an all-numeric `tp_index` set reads back as INT). Rows
+    * mirror the scan's aggregators value for value, including the
+    * all-null (default-partition) outputs: empty HLL/KLL/frequent-items
+    * blobs, null ranges, lengths and sums. Returns the rows plus the
+    * columns left to the scan — any inferred type other than
+    * string/int/long (or null, for an all-default dir set), whose string
+    * forms the scan would derive through a cast. 0-row files get no
+    * rows, as the scan's groupBy gives none.
+    */
+  private[lake] def partitionColStats(
+      spark: SparkSession, table: String, files: Seq[(String, Long)],
+      columns: Seq[String], seqNo: Long)
+      : (Seq[ManifestIO.CRow], Seq[String]) = {
+    if (columns.isEmpty) return (Nil, Nil)
+    val f = fs(spark, root)
+    val withDirs = files.map { case (file, n) =>
+      (file, n, f.makeQualified(new Path(file).getParent))
+    }
+    val spec = org.apache.spark.sql.execution.datasources
+      .GraftPartitionInference.infer(spark, withDirs.map(_._3).distinct,
+        f.makeQualified(new Path(tableDir(table))))
+    val typed = spec.partitionColumns
+    val valuesOf = spec.partitions.map(p => p.path -> p.values).toMap
+    // a file outside any partition dir has no directory value to serve
+    if (!withDirs.forall(x => valuesOf.contains(x._3)))
+      return (Nil, columns)
+    val (served, unserved) = columns.partition(c =>
+      typed.fieldNames.contains(c) && (typed(c).dataType match {
+        case StringType | IntegerType | LongType | NullType => true
+        case _ => false
+      }))
+    val rows = for ((file, n, dir) <- withDirs if n > 0; c <- served) yield {
+      val values = valuesOf(dir)
+      val i = typed.fieldIndex(c)
+      // the type and lgK Spark's hll_sketch_agg builds
+      val hll = new org.apache.datasketches.hll.HllSketch(
+        graft.functions.NdvFns.LgK,
+        org.apache.datasketches.hll.TgtHllType.HLL_8)
+      typed(c).dataType match {
+        case NullType =>
+          // every appended dir is the default partition: the scan types
+          // the column NullType and sketches its (null) string cast
+          ManifestIO.CRow(file, c, Some(hll.toUpdatableByteArray),
+            nulls = n, n = n, sumLen = None, maxLen = None,
+            minD = None, maxD = None, minS = None, maxS = None,
+            kll = None, mg = None, sumV = None, seq = seqNo)
+        case StringType =>
+          val v = Option(values.getUTF8String(i))
+          v.foreach(s => hll.update(s.getBytes))
+          val mg = graft.functions.TopKFns.emptySketch()
+          v.foreach(s => mg.update(s.toString, n))
+          ManifestIO.CRow(file, c, Some(hll.toUpdatableByteArray),
+            nulls = if (v.isEmpty) n else 0L, n = n,
+            sumLen = v.map(_.numChars.toLong * n),
+            maxLen = v.map(_.numChars.toLong),
+            minD = None, maxD = None,
+            minS = v.map(_.toString), maxS = v.map(_.toString),
+            kll = None, mg = Some(graft.functions.TopKFns.toBlob(mg)),
+            sumV = None, seq = seqNo)
+        case dt =>
+          val v: Option[Long] =
+            if (values.isNullAt(i)) None
+            else if (dt == IntegerType) Some(values.getInt(i).toLong)
+            else Some(values.getLong(i))
+          v.foreach(l => hll.update(l))
+          val kll = org.apache.datasketches.kll.KllDoublesSketch
+            .newHeapInstance(graft.functions.KllFns.DefaultK)
+          v.foreach(l => kll.update(l.toDouble, n))
+          ManifestIO.CRow(file, c, Some(hll.toUpdatableByteArray),
+            nulls = if (v.isEmpty) n else 0L, n = n,
+            sumLen = None, maxLen = None,
+            minD = v.map(_.toDouble), maxD = v.map(_.toDouble),
+            minS = None, maxS = None,
+            kll = Some(kll.toByteArray), mg = None,
+            sumV = v.map(BigInt(_) * n), seq = seqNo)
+      }
+    }
+    (rows, unserved)
+  }
+
+  /** Sidecar rows for `columns` from ONE aggregate scan of exactly
+    * `files`, collected (one row per file) and pivoted on the driver.
+    * The data schema comes from the first file's footer — Spark-written
+    * lake files carry it — so the read skips its schema-inference job.
+    */
+  private[lake] def scanColStats(
+      spark: SparkSession, table: String, files: Seq[String],
+      allColumns: Seq[String], seqNo: Long): Seq[ManifestIO.CRow] = {
+    if (files.isEmpty || allColumns.isEmpty) return Nil
+    val reader = spark.read.option("basePath", tableDir(table))
+    val src = ManifestIO.sparkSchemaOf(
+        spark.sessionState.newHadoopConf(), new Path(files.head))
+      .fold(reader)(s => reader.schema(forceNullable(s)))
       .parquet(files: _*)
       .withColumn("__file", normalizedFileCol(input_file_name()))
     val schema = src.schema
@@ -373,7 +488,7 @@ final case class Lake(root: String, manifestCompactThreshold: Int = 64)
         s"colstats: table '$table' has no column '$c' — skipping")
       known
     }
-    if (columns.isEmpty) return
+    if (columns.isEmpty) return Nil
     val aggs = columns.flatMap { c =>
       val dt = schema(c).dataType
       val sketchIn = dt match {
@@ -387,56 +502,50 @@ final case class Lake(root: String, manifestCompactThreshold: Int = 64)
         case _ => false
       }
       Seq(
-        hll_sketch_agg(sketchIn).as(s"__sk_$c"),
+        hll_sketch_agg(sketchIn),
         // per-file KLL quantile sketch (numeric only): the mergeable
         // distribution feed for CatalogColumnStat.histogram — CBO's
         // answer to skewed-value filter selectivity (r16 task 4)
-        (if (isNum) graft.functions.KllFns.kllAgg(spark, col(c))
-         else max(lit(null).cast("binary"))).as(s"__kll_$c"),
+        if (isNum) graft.functions.KllFns.kllAgg(spark, col(c))
+        else lit(null).cast("binary"),
         // per-file frequent-items sketch (string columns only): the
         // mergeable "top talkers" feed — exact while never evicting,
         // which is the metadata serve gate (TopKFns)
-        (if (isStr) graft.functions.TopKFns.topkSketchAgg(spark, col(c))
-         else max(lit(null).cast("binary"))).as(s"__mg_$c"),
-        sum(when(col(c).isNull, 1L).otherwise(0L)).as(s"__nl_$c"),
-        (if (isStr) sum(length(col(c)).cast("long"))
-         else max(lit(null).cast("long"))).as(s"__sl_$c"),
-        (if (isStr) max(length(col(c)).cast("long"))
-         else max(lit(null).cast("long"))).as(s"__ml_$c"),
-        (if (isNum) min(col(c).cast("double"))
-         else min(lit(null).cast("double"))).as(s"__mn_$c"),
-        (if (isNum) max(col(c).cast("double"))
-         else max(lit(null).cast("double"))).as(s"__mx_$c"),
+        if (isStr) graft.functions.TopKFns.topkSketchAgg(spark, col(c))
+        else lit(null).cast("binary"),
+        sum(when(col(c).isNull, 1L).otherwise(0L)),
+        if (isStr) sum(length(col(c)).cast("long")) else lit(null),
+        if (isStr) max(length(col(c)).cast("long")) else lit(null),
+        if (isNum) min(col(c).cast("double")) else lit(null),
+        if (isNum) max(col(c).cast("double")) else lit(null),
         // string zone maps: lexicographic per-file range — prunes
         // source/URL/category predicates the numeric range can't
-        (if (isStr) min(col(c))
-         else min(lit(null).cast("string"))).as(s"__ms_$c"),
-        (if (isStr) max(col(c))
-         else max(lit(null).cast("string"))).as(s"__xs_$c"),
+        if (isStr) min(col(c)) else lit(null),
+        if (isStr) max(col(c)) else lit(null),
         // per-file value sum (integral columns only): integer addition
         // is order-independent, so per-file sums merge into an EXACT
         // table sum — the metadata-aggregate feed for sum(int_col).
         // DECIMAL(38,0) accumulation: a long sum could overflow (ANSI
         // would fail the ingest); the fold converts back at answer time
-        (if (isIntegral) sum(col(c).cast("decimal(38,0)"))
-         else max(lit(null).cast("decimal(38,0)"))).as(s"__sv_$c"))
+        if (isIntegral) sum(col(c).cast("decimal(38,0)")) else lit(null))
     }
-    val allAggs = count(lit(1)).as("__n") +: aggs
     val perFile = src.groupBy(col("__file"))
-      .agg(allAggs.head, allAggs.tail: _*)
-    val rows = columns.map { c =>
-      perFile.select(
-        col("__file").as("file"), lit(c).as("column"),
-        col(s"__sk_$c").as("sketch"), col(s"__nl_$c").as("nulls"),
-        col("__n").as("n"), col(s"__sl_$c").as("sum_len"),
-        col(s"__ml_$c").as("max_len"), col(s"__mn_$c").as("min_d"),
-        col(s"__mx_$c").as("max_d"), col(s"__ms_$c").as("min_s"),
-        col(s"__xs_$c").as("max_s"), col(s"__kll_$c").as("kll"),
-        col(s"__mg_$c").as("mg"),
-        col(s"__sv_$c").as("sum_v"), lit(seqNo).as("seq"))
-    }.reduce(_.unionByName(_))
-    rows.coalesce(1).write.mode(SaveMode.Append)
-      .parquet(colStatsDir(table))
+      .agg(count(lit(1)), aggs: _*).collect()
+    val width = aggs.length / columns.length
+    for (r <- perFile.toSeq; (c, j) <- columns.zipWithIndex) yield {
+      val o = 2 + j * width
+      def opt[T](k: Int)(get: Int => T): Option[T] =
+        if (r.isNullAt(o + k)) None else Some(get(o + k))
+      ManifestIO.CRow(r.getString(0), c, Some(r.getAs[Array[Byte]](o)),
+        nulls = r.getLong(o + 3), n = r.getLong(1),
+        sumLen = opt(4)(r.getLong), maxLen = opt(5)(r.getLong),
+        minD = opt(6)(r.getDouble), maxD = opt(7)(r.getDouble),
+        minS = opt(8)(r.getString), maxS = opt(9)(r.getString),
+        kll = opt(1)(k => r.getAs[Array[Byte]](k)),
+        mg = opt(2)(k => r.getAs[Array[Byte]](k)),
+        sumV = opt(10)(k => BigInt(r.getDecimal(k).toBigInteger)),
+        seq = seqNo)
+    }
   }
 
   /** Enable incremental column stats for `columns`: ONE seeding scan
@@ -452,8 +561,8 @@ final case class Lake(root: String, manifestCompactThreshold: Int = 64)
       columns: Seq[String]): Unit = locked(table) {
     require(columns.nonEmpty, "enableColumnStats: no columns given")
     val f = fs(spark, root)
-    val live = fileStats(spark, table, reconcileWithListing = false)
-      .select("file").collect().map(_.getString(0)).toSeq
+    val live = liveFiles(spark, table, reconcileWithListing = false)
+      .map(r => r.file -> r.rows)
     if (live.nonEmpty) {
       val schema = read(spark, table).schema
       columns.foreach(c => require(schema.fieldNames.contains(c),
@@ -487,19 +596,17 @@ final case class Lake(root: String, manifestCompactThreshold: Int = 64)
     val cols = colStatsColumns(spark, table)
     if (cols.isEmpty) return 0
     healSwapAsides(spark, table)
-    val live = fileStats(spark, table, reconcileWithListing = false)
-      .select("file").collect().map(_.getString(0))
-    val covered: Set[String] =
-      if (!fs(spark, root).exists(new Path(colStatsDir(table))))
-        Set.empty
-      else spark.read.parquet(colStatsDir(table))
-        .where(col("column").isin(cols: _*))
-        .groupBy("file")
-        .agg(countDistinct("column").as("nc"))
-        .where(col("nc") === cols.size)
-        .select("file").collect().map(_.getString(0)).toSet
-    val missing = live.filterNot(covered).toSeq
-    if (missing.nonEmpty) appendColStats(spark, table, missing, cols)
+    val live = liveFiles(spark, table, reconcileWithListing = false)
+    val wanted = cols.toSet
+    val covered: Set[String] = ManifestIO.readColStats(
+        spark.sessionState.newHadoopConf(), colStatsDir(table))
+      .filter(r => wanted(r.column))
+      .groupBy(_.file).collect {
+        case (file, rs) if rs.size == wanted.size => file
+      }.toSet
+    val missing = live.filterNot(r => covered(r.file))
+    if (missing.nonEmpty)
+      appendColStats(spark, table, missing.map(r => r.file -> r.rows), cols)
     missing.size
   }
 
@@ -874,12 +981,13 @@ final case class Lake(root: String, manifestCompactThreshold: Int = 64)
     // ManifestIO readers both consume mixed old/new dirs.
     ManifestIO.writeManifest(spark.sessionState.newHadoopConf(),
       manifestDir(table), statsRows ++ tombRows)
-    // incremental column stats, when enabled: the same added files,
-    // one extra scan of exactly them (removals need nothing — merge
+    // incremental column stats, when enabled: the same added files
+    // with the row counts just recorded (removals need nothing — merge
     // time semi-joins against the live manifest)
     val csCols = colStatsColumns(spark, table)
     if (csCols.nonEmpty && added.nonEmpty)
-      appendColStats(spark, table, added, csCols)
+      appendColStats(spark, table,
+        statsRows.map(r => r.file -> r.rows), csCols)
     maybeCompactManifest(spark, table)
   }
 
@@ -900,6 +1008,7 @@ final case class Lake(root: String, manifestCompactThreshold: Int = 64)
   private def maybeCompactManifest(
       spark: SparkSession, table: String): Unit = {
     val filesys = fs(spark, root)
+    val conf = spark.sessionState.newHadoopConf()
     def countFiles(dir: Path): Int =
       if (!filesys.exists(dir)) 0
       else filesys.listStatus(dir).count { st =>
@@ -917,58 +1026,39 @@ final case class Lake(root: String, manifestCompactThreshold: Int = 64)
       if (!filesys.rename(src, dst))
         throw new java.io.IOException(
           s"manifest swap rename failed: $src -> $dst")
-    def swap(dir: Path, rows: DataFrame): Unit = {
+    // the compacted rows are written directly into `_new` (tmp +
+    // _SUCCESS), then the aside→in→drop renames — no Spark job
+    def swap(dir: Path)(write: String => Unit): Unit = {
       val tmp = new Path(dir.toString + "_new")
       val old = new Path(dir.toString + "_old")
-      rows.coalesce(1).write.mode(SaveMode.Overwrite)
-        .parquet(tmp.toString)
+      filesys.delete(tmp, true)
+      write(tmp.toString)
       filesys.delete(old, true)
       if (filesys.exists(dir)) renameOrThrow(dir, old)
       renameOrThrow(tmp, dir)
       filesys.delete(old, true)
       ()
     }
-    healSwapAsides(spark, table)
-    val mdir = new Path(manifestDir(table))
-    if (countFiles(mdir) > manifestCompactThreshold) locked(table) {
-      // r19: the live manifest rows are reconciled driver-side now —
-      // write the compacted dir directly (tmp + _SUCCESS + the same
-      // aside→in→drop renames), no Spark job
-      val seqNo = nextSeq(spark, table)
-      val rows = ManifestIO.readManifest(
-          spark.sessionState.newHadoopConf(), manifestDir(table))
-        .groupBy(_.file).valuesIterator.map(_.maxBy(_.seq))
-        .filter(_.rows >= 0L)
-        .map(_.copy(seq = seqNo)).toSeq
-      val tmp = new Path(mdir.toString + "_new")
-      val old = new Path(mdir.toString + "_old")
-      filesys.delete(tmp, true)
-      ManifestIO.writeManifest(
-        spark.sessionState.newHadoopConf(), tmp.toString, rows)
-      filesys.delete(old, true)
-      if (filesys.exists(mdir)) renameOrThrow(mdir, old)
-      renameOrThrow(tmp, mdir)
-      filesys.delete(old, true)
-      ()
-    }
-    // the colstats sidecar accumulates the same way (one file per
-    // mutation on an enabled table): same threshold, same swap —
-    // newest row per (file, column), dead files dropped
-    val cdir = new Path(colStatsDir(table))
-    if (countFiles(cdir) > manifestCompactThreshold) locked(table) {
-      val live = fileStats(spark, table, reconcileWithListing = false)
-        .select("file")
-      swap(cdir,
-        sidecarWithMg(sidecarWithSum(sidecarWithKll(
-          spark.read.parquet(cdir.toString))))
-          .groupBy("file", "column")
-          .agg(max_by(struct(col("sketch"), col("nulls"), col("n"),
-            col("sum_len"), col("max_len"), col("min_d"),
-            col("max_d"), col("min_s"), col("max_s"), col("kll"),
-            col("mg"), col("sum_v"), col("seq")),
-            col("seq")).as("s"))
-          .select(col("file"), col("column"), col("s.*"))
-          .join(live, Seq("file"), "left_semi"))
+    locked(table) {
+      healSwapAsides(spark, table)
+      val mdir = new Path(manifestDir(table))
+      if (countFiles(mdir) > manifestCompactThreshold) {
+        val seqNo = nextSeq(spark, table)
+        val rows = ManifestIO.liveRows(conf, manifestDir(table))
+          .map(_.copy(seq = seqNo))
+        swap(mdir)(ManifestIO.writeManifest(conf, _, rows))
+      }
+      // the colstats sidecar accumulates the same way (one file per
+      // mutation on an enabled table): same threshold, same swap —
+      // newest row per (file, column), dead files dropped
+      val cdir = new Path(colStatsDir(table))
+      if (countFiles(cdir) > manifestCompactThreshold) {
+        val live = liveFiles(spark, table, reconcileWithListing = false)
+          .map(_.file).toSet
+        val rows = ManifestIO.readColStats(conf, cdir.toString)
+          .filter(r => live(r.file))
+        swap(cdir)(ManifestIO.writeColStats(conf, _, rows))
+      }
     }
   }
 
@@ -980,21 +1070,6 @@ final case class Lake(root: String, manifestCompactThreshold: Int = 64)
   private def sidecarWithKll(df: DataFrame): DataFrame =
     if (df.columns.contains("kll")) df
     else df.withColumn("kll", lit(null).cast("binary"))
-
-  /** Pre-r16 sidecars lack the `sum_v` column — read them as null
-    * (sum queries fall back to the residual scan; re-enabling stats
-    * re-seeds with sums).
-    */
-  private def sidecarWithSum(df: DataFrame): DataFrame =
-    if (df.columns.contains("sum_v")) df
-    else df.withColumn("sum_v", lit(null).cast("decimal(38,0)"))
-
-  /** Pre-r19 sidecars lack the `mg` frequent-items blob — null stands
-    * in (top-k queries fall back to the scan until a re-seed).
-    */
-  private def sidecarWithMg(df: DataFrame): DataFrame =
-    if (df.columns.contains("mg")) df
-    else df.withColumn("mg", lit(null).cast("binary"))
 
   private def recordStats(
       spark: SparkSession, table: String, added: Seq[String]): Unit =
@@ -1027,30 +1102,6 @@ final case class Lake(root: String, manifestCompactThreshold: Int = 64)
   def fileStats(
       spark: SparkSession, table: String,
       reconcileWithListing: Boolean): DataFrame = {
-    // The read serializes with the compaction swap under the table
-    // lock, after healing any crashed swap — a reader can no longer
-    // observe the mid-swap absent-dir state from this JVM (r16
-    // ADVICE-medium). r19 optimization: the manifest is metadata-sized
-    // BY DESIGN and every consumer of this DataFrame collects it
-    // promptly, so the newest-row-per-file reconciliation runs on the
-    // driver over a direct parquet read — no Spark read job, no
-    // 32-partition shuffle for a KB of metadata. The result is a
-    // LocalRelation, which downstream joins (compaction planning)
-    // broadcast for free.
-    val rows = locked(table) {
-      healSwapAsides(spark, table)
-      ManifestIO.readManifest(
-        spark.sessionState.newHadoopConf(), manifestDir(table))
-    }
-    val latest = rows.groupBy(_.file).valuesIterator.map(_.maxBy(_.seq))
-      .filter(_.rows >= 0L) // newest row a tombstone → file is dead
-      .toSeq
-    val kept =
-      if (!reconcileWithListing) latest
-      else {
-        val live = dataFiles(spark, table).toSet
-        latest.filter(r => live(r.file))
-      }
     val schema = StructType(Seq(
       StructField("file", StringType),
       StructField("rows", org.apache.spark.sql.types.LongType,
@@ -1058,9 +1109,39 @@ final case class Lake(root: String, manifestCompactThreshold: Int = 64)
       StructField("min_ts", org.apache.spark.sql.types.TimestampType),
       StructField("max_ts", org.apache.spark.sql.types.TimestampType)))
     spark.createDataFrame(
-      kept.map(r => org.apache.spark.sql.Row(
-        r.file, r.rows, r.minTs.orNull, r.maxTs.orNull)).asJava,
+      liveFiles(spark, table, reconcileWithListing).map(r =>
+        org.apache.spark.sql.Row(
+          r.file, r.rows, r.minTs.orNull, r.maxTs.orNull)).asJava,
       schema)
+  }
+
+  /** [[fileStats]]' rows as plain driver-side values — what planners
+    * that fold them on the driver (compaction) consume directly.
+    */
+  private[lake] def liveFiles(
+      spark: SparkSession, table: String): Seq[ManifestIO.MRow] =
+    liveFiles(spark, table,
+      reconcileWithListing = isLocalFs(fs(spark, root)))
+
+  private[lake] def liveFiles(
+      spark: SparkSession, table: String,
+      reconcileWithListing: Boolean): Seq[ManifestIO.MRow] = {
+    // The read serializes with the compaction swap under the table
+    // lock, after healing any crashed swap — a reader can no longer
+    // observe the mid-swap absent-dir state from this JVM (r16
+    // ADVICE-medium). The manifest is metadata-sized BY DESIGN, so the
+    // newest-row-per-file reconciliation runs on the driver over a
+    // direct parquet read — no Spark job for a KB of metadata.
+    val latest = locked(table) {
+      healSwapAsides(spark, table)
+      ManifestIO.liveRows(
+        spark.sessionState.newHadoopConf(), manifestDir(table))
+    }
+    if (!reconcileWithListing) latest
+    else {
+      val live = dataFiles(spark, table).toSet
+      latest.filter(r => live(r.file))
+    }
   }
 
   /** Change token over one metadata directory: sorted (name, size)
@@ -1097,49 +1178,19 @@ final case class Lake(root: String, manifestCompactThreshold: Int = 64)
         Lake.noteMiss(key)
         val snap = locked(table) {
           healSwapAsides(spark, table)
-          val f = fs(spark, root)
           // token re-read AFTER healing (the heal may swap the dirs)
           val token = metaToken(spark, table)
-          // r19 optimization: direct driver-side manifest read — the
-          // probe already collects to a Map, so the Spark read+shuffle
-          // job bought nothing (metadata-sized dir by construction)
+          // direct driver-side reads of both metadata dirs — the
+          // snapshot is collected to Maps anyway, so Spark jobs over
+          // these metadata-sized dirs bought nothing
+          val conf = spark.sessionState.newHadoopConf()
           val manifest: Map[String, Lake.ManifestStat] =
-            ManifestIO.readManifest(
-                spark.sessionState.newHadoopConf(), manifestDir(table))
-              .groupBy(_.file).valuesIterator.map(_.maxBy(_.seq))
-              .filter(_.rows >= 0L)
+            ManifestIO.liveRows(conf, manifestDir(table))
               .map(r => r.file -> Lake.ManifestStat(r.rows, r.minTs, r.maxTs))
               .toMap
-          val sidecar: Map[(String, String), Lake.SideStat] =
-            if (!f.exists(new Path(colStatsDir(table))))
-              Map.empty
-            else sidecarWithMg(sidecarWithKll(
-              sidecarWithSum(spark.read.parquet(colStatsDir(table)))))
-              .groupBy("file", "column")
-              .agg(max_by(struct(col("nulls"), col("n"), col("min_d"),
-                col("max_d"), col("min_s"), col("max_s"), col("sum_v"),
-                col("sketch"), col("kll"), col("mg")),
-                col("seq")).as("s"))
-              .select(col("file"), col("column"), col("s.nulls"),
-                col("s.n"), col("s.min_d"), col("s.max_d"),
-                col("s.min_s"), col("s.max_s"), col("s.sum_v"),
-                col("s.sketch"), col("s.kll"), col("s.mg"))
-              .collect().map { r =>
-                (r.getString(0), r.getString(1)) -> Lake.SideStat(
-                  r.getLong(2), r.getLong(3),
-                  if (r.isNullAt(4)) None else Some(r.getDouble(4)),
-                  if (r.isNullAt(5)) None else Some(r.getDouble(5)),
-                  if (r.isNullAt(6)) None else Some(r.getString(6)),
-                  if (r.isNullAt(7)) None else Some(r.getString(7)),
-                  if (r.isNullAt(8)) None
-                  else Some(BigInt(r.getDecimal(8).toBigInteger)),
-                  if (r.isNullAt(9)) None
-                  else Some(r.getAs[Array[Byte]](9)),
-                  if (r.isNullAt(10)) None
-                  else Some(r.getAs[Array[Byte]](10)),
-                  if (r.isNullAt(11)) None
-                  else Some(r.getAs[Array[Byte]](11)))
-              }.toMap
+          val sidecar: Map[(String, String), ManifestIO.CRow] =
+            ManifestIO.readColStats(conf, colStatsDir(table))
+              .map(r => (r.file, r.column) -> r).toMap
           Lake.MetaSnapshot(token, manifest, sidecar)
         }
         Lake.storeSnapshot(key, snap)
@@ -1154,10 +1205,8 @@ final case class Lake(root: String, manifestCompactThreshold: Int = 64)
     */
   private[lake] def tombstonedFiles(
       spark: SparkSession, table: String): Set[String] =
-    // r19: direct driver-side manifest read (see fileStats)
-    ManifestIO.readManifest(
+    ManifestIO.latestRows(
         spark.sessionState.newHadoopConf(), manifestDir(table))
-      .groupBy(_.file).valuesIterator.map(_.maxBy(_.seq))
       .filter(_.rows < 0L).map(_.file).toSet
 
   /** Data-skipping read: consult the stats manifest and scan only the
@@ -1410,8 +1459,8 @@ final case class Lake(root: String, manifestCompactThreshold: Int = 64)
   import Lake.StatsAggParts
 
   /** Metadata-only answer when EVERY live file is covered; None when a
-    * residual scan would be needed (or the table has no data). Runs
-    * only metadata-sized jobs — safe to call from an optimizer rule.
+    * residual scan would be needed (or the table has no data). Reads
+    * only metadata, on the driver — safe to call from an optimizer rule.
     * `columns` may be empty (a pure `count(*)`: manifest row counts +
     * the unrecorded-file check). `rangeColumns` is the subset whose
     * min/max is actually wanted — a count-only column (say a decimal
@@ -1427,13 +1476,15 @@ final case class Lake(root: String, manifestCompactThreshold: Int = 64)
       ndvColumns: Set[String] = Set.empty,
       fileFilter: String => Boolean = _ => true,
       kllColumns: Set[String] = Set.empty,
-      mgColumns: Set[String] = Set.empty): Option[StatsAggParts] = {
+      mgColumns: Set[String] = Set.empty,
+      countedColumns: String => Boolean = _ => true)
+      : Option[StatsAggParts] = {
     if (!hasData(spark, table)) return None
     val schema = schemaOf(spark, table)
     if (!columns.forall(schema.fieldNames.contains)) return None
     val (groups, residual) = statsAggPartsGrouped(spark, table, columns,
       schema, rangeColumns, sumColumns, _ => Nil, fileFilter,
-      ndvColumns, kllColumns, mgColumns)
+      ndvColumns, kllColumns, mgColumns, countedColumns)
     if (residual.nonEmpty) None
     else Some(groups.values.headOption.getOrElse(
       StatsAggParts(0L, Map.empty, Map.empty, Map.empty, Map.empty, Nil)))
@@ -1938,7 +1989,8 @@ final case class Lake(root: String, manifestCompactThreshold: Int = 64)
       ndvColumns: Set[String] = Set.empty,
       fileFilter: String => Boolean = _ => true,
       kllColumns: Set[String] = Set.empty,
-      mgColumns: Set[String] = Set.empty)
+      mgColumns: Set[String] = Set.empty,
+      countedColumns: String => Boolean = _ => true)
       : Option[Seq[(Seq[String], StatsAggParts)]] = {
     if (groupCols.isEmpty ||
       !groupCols.forall(TpSchema.partitionCols.contains)) return None
@@ -1951,20 +2003,25 @@ final case class Lake(root: String, manifestCompactThreshold: Int = 64)
         val pv = partitionValues(relOf(table, f))
         groupCols.map(pv.getOrElse(_, null))
       },
-      fileFilter, ndvColumns, kllColumns, mgColumns)
+      fileFilter, ndvColumns, kllColumns, mgColumns, countedColumns)
     if (residual.nonEmpty) None else Some(groups.toSeq)
   }
 
   /** Core: per-group metadata partials + the global residual list.
-    * Metadata-sized jobs only (the manifest read and one sidecar
-    * aggregate); never touches data files. `groupOf` maps a file path
-    * to its group key (Nil = one global group).
+    * Driver-side metadata reads only (the manifest and the sidecar, via
+    * the cached snapshot); never touches data files. `groupOf` maps a
+    * file path to its group key (Nil = one global group).
     */
   /** @param fileFilter restricts the aggregate to files whose
     *   partition directory passes a per-file-constant predicate (the
     *   rule's partition-only WHERE support) — failing files leave BOTH
     *   the totals and the residual set, exactly as partition pruning
     *   would exclude them from a scan.
+    * @param countedColumns the columns whose `count` the caller reads.
+    *   A `tp_timestamp`/`tp_date` column that is only ranged (min/max,
+    *   nothing counted, summed or sketched) is answered from the
+    *   manifest ts range alone — no sidecar row needed, so the
+    *   whole-table `count(*), min(ts), max(ts)` serves on every table.
     */
   private def statsAggPartsGrouped(
       spark: SparkSession, table: String,
@@ -1975,9 +2032,26 @@ final case class Lake(root: String, manifestCompactThreshold: Int = 64)
       fileFilter: String => Boolean = _ => true,
       ndvColumns: Set[String] = Set.empty,
       kllColumns: Set[String] = Set.empty,
-      mgColumns: Set[String] = Set.empty)
+      mgColumns: Set[String] = Set.empty,
+      countedColumns: String => Boolean = _ => true)
       : (Map[Seq[String], StatsAggParts], Seq[String]) = {
     def dtOf(c: String): DataType = schema(c).dataType
+    val utc = TpSchema.isUtcZone(
+      spark.sessionState.conf.sessionLocalTimeZone)
+    // min/max-only time columns ride the manifest ts range (tp_date:
+    // day-truncated extremes, exact under the UTC-writer convention)
+    def manifestRanged(c: String): Boolean =
+      rangeColumns(c) && !countedColumns(c) && !sumColumns(c) &&
+        !ndvColumns(c) && !kllColumns(c) && !mgColumns(c) &&
+        (c == TpSchema.Timestamp ||
+          (c == TpSchema.Date && dtOf(c) == DateType && utc))
+    def toDate(ts: Option[Timestamp]): java.sql.Date =
+      ts.map { t =>
+        val us = org.apache.spark.sql.catalyst.util.DateTimeUtils
+          .fromJavaTimestamp(t)
+        java.sql.Date.valueOf(java.time.LocalDate.ofEpochDay(
+          Math.floorDiv(us, 86400000000L)))
+      }.orNull
     def minMaxFromZones(dt: DataType): Boolean = dt match {
       case ByteType | ShortType | IntegerType | LongType |
            FloatType | DoubleType | StringType => true
@@ -2016,6 +2090,7 @@ final case class Lake(root: String, manifestCompactThreshold: Int = 64)
           case StringType => !sumColumns(c)
           case _ => false
         })
+      if (manifestRanged(c)) return true
       val cov = sidecar.get((file, c))
       // tp_date DERIVES from tp_timestamp (null iff ts null; extremes
       // are the day-truncated manifest ts extremes under the UTC
@@ -2023,9 +2098,7 @@ final case class Lake(root: String, manifestCompactThreshold: Int = 64)
       // count from the tp_timestamp row and its ranges from the
       // manifest. Estimator aggregates still need a real blob.
       if (c == TpSchema.Date && cov.isEmpty)
-        return dtOf(c) == DateType &&
-          TpSchema.isUtcZone(
-            spark.sessionState.conf.sessionLocalTimeZone) &&
+        return dtOf(c) == DateType && utc &&
           !ndvColumns(c) && !kllColumns(c) && !sumColumns(c) &&
           sidecar.get((file, TpSchema.Timestamp)).exists(_.n == rows)
       // count(c): needs the sidecar's null/row counts, and they must
@@ -2049,9 +2122,7 @@ final case class Lake(root: String, manifestCompactThreshold: Int = 64)
       // are monotone in ts); exact only under the engine's UTC-writer
       // convention, so gated on the reader session being UTC like the
       // splitBand date fold
-      if (c == TpSchema.Date &&
-        TpSchema.isUtcZone(
-          spark.sessionState.conf.sessionLocalTimeZone)) return true
+      if (c == TpSchema.Date && utc) return true
       val dt = dtOf(c)
       minMaxFromZones(dt) && (dt match {
         case LongType => cov.exists { r =>
@@ -2122,6 +2193,11 @@ final case class Lake(root: String, manifestCompactThreshold: Int = 64)
                 }
                 if (rangeColumns(c)) merge(c, dt, v, v)
               }
+            } else if (manifestRanged(c)) {
+              // range-only time column: manifest extremes, no count
+              if (c == TpSchema.Timestamp)
+                merge(c, dtOf(c), m.minTs.orNull, m.maxTs.orNull)
+              else merge(c, dtOf(c), toDate(m.minTs), toDate(m.maxTs))
             } else if (c == TpSchema.Date &&
                 !sidecar.contains((file, c))) {
               // derived-column fallback (usable() gated UTC + the ts
@@ -2129,29 +2205,14 @@ final case class Lake(root: String, manifestCompactThreshold: Int = 64)
               // ranges the day-truncated manifest extremes
               val tsr = sidecar((file, TpSchema.Timestamp))
               cnt(c) += tsr.n - tsr.nulls
-              if (rangeColumns(c)) {
-                def d(ts: Option[Timestamp]): java.sql.Date =
-                  ts.map { t =>
-                    val us = org.apache.spark.sql.catalyst.util
-                      .DateTimeUtils.fromJavaTimestamp(t)
-                    java.sql.Date.valueOf(java.time.LocalDate.ofEpochDay(
-                      Math.floorDiv(us, 86400000000L)))
-                  }.orNull
-                merge(c, dtOf(c), d(m.minTs), d(m.maxTs))
-              }
+              if (rangeColumns(c))
+                merge(c, dtOf(c), toDate(m.minTs), toDate(m.maxTs))
             } else {
             val r = sidecar((file, c))
             cnt(c) += r.n - r.nulls
             if (sumColumns(c))
               r.sumV.foreach(v => sm(c) = sm.getOrElse(c, BigInt(0)) + v)
             val dt = dtOf(c)
-            def toDate(ts: Option[Timestamp]): java.sql.Date =
-              ts.map { t =>
-                val us = org.apache.spark.sql.catalyst.util.DateTimeUtils
-                  .fromJavaTimestamp(t)
-                java.sql.Date.valueOf(java.time.LocalDate.ofEpochDay(
-                  Math.floorDiv(us, 86400000000L)))
-              }.orNull
             if (!rangeColumns(c)) () // count-only column: no range merge
             else if (c == TpSchema.Timestamp)
               merge(c, dt, m.minTs.orNull, m.maxTs.orNull)
@@ -2354,8 +2415,8 @@ final case class Lake(root: String, manifestCompactThreshold: Int = 64)
       // thread can neither inherit nor clobber it. The timestamp
       // encoding has no such option — withMicrosTimestamps serializes
       // its conf window instead (micros annotation → footer stats,
-      // see append).
-      Lake.withMicrosTimestamps(spark) {
+      // see append; set on the writing DataFrame's own session).
+      Lake.withMicrosTimestamps(df.sparkSession) {
         df.write
           .option("partitionOverwriteMode", "dynamic")
           .partitionBy(TpSchema.partitionCols: _*)
@@ -2530,15 +2591,6 @@ object Lake {
       org.apache.spark.sql.catalyst.util.DateTimeUtils.fromJavaTimestamp)
   }
 
-  /** Newest-seq colstats sidecar row for one (file, column). */
-  private[lake] final case class SideStat(
-      nulls: Long, n: Long,
-      minD: Option[Double], maxD: Option[Double],
-      minS: Option[String], maxS: Option[String],
-      sumV: Option[BigInt], sketch: Option[Array[Byte]],
-      kll: Option[Array[Byte]],
-      mg: Option[Array[Byte]] = None)
-
   /** One table's metadata, collected once per mutation: the newest-seq
     * manifest rows (tombstones dropped) and newest-seq sidecar rows for
     * every stats column — the shared feed for the optimize-time probes
@@ -2554,7 +2606,7 @@ object Lake {
   private[lake] final case class MetaSnapshot(
       token: String,
       manifest: Map[String, ManifestStat],
-      sidecar: Map[(String, String), SideStat]) {
+      sidecar: Map[(String, String), ManifestIO.CRow]) {
 
     /** Sidecar rows as [[ColumnZone]]s, the value-column zone family. */
     lazy val zoneMaps: Map[String, Map[String, ColumnZone]] =

@@ -21,10 +21,10 @@ import org.apache.spark.sql.functions._
   */
 object Maintenance {
 
-  /** Planning observability for the rehearsal: how many manifest rows
-    * the last [[compact]] call's driver-side planner actually
-    * collected vs the table's live-file total — the r16 task-7 bound
-    * (candidates only, zero at the compaction fixed point).
+  /** Planning observability for the rehearsal: the last [[compact]]
+    * call's live-file total and how many of those rows sit in dirs that
+    * need work — the r16 task-7 bound (zero at the compaction fixed
+    * point).
     */
   final case class PlanProbe(manifestRows: Long, collectedRows: Long)
   @volatile var lastCompactPlan: PlanProbe = PlanProbe(0L, 0L)
@@ -94,53 +94,27 @@ object Maintenance {
     // object stores it trusts tombstones — fileStats scaladoc). The
     // only listings below are SCOPED to the rewritten dirs.
     //
-    // The driver collects only CANDIDATE dirs' rows (r16 task 7): the
-    // work predicate is pre-evaluated AS A DATAFRAME — per-dir file
-    // count vs the target-implied ideal exactly, overlap via a
-    // running-max window (a conservative SUPERSET of the exact
-    // consecutive-pair check, re-run driver-side below on the
-    // survivors). A 10⁵–10⁶-file table at its compaction fixed point
-    // collects ZERO rows where it used to materialize every manifest
-    // row; worst case (every dir needs work) equals the old cost —
-    // and then the rewrite dwarfs planning anyway.
-    val st = lake.fileStats(spark, table)
-    val before = st.count()
-    val dirCol = regexp_replace(col("file"), "/[^/]*$", "")
-    val win = org.apache.spark.sql.expressions.Window
-      .partitionBy("dir").orderBy("min_ts")
-      .rowsBetween(org.apache.spark.sql.expressions.Window
-        .unboundedPreceding, -1)
-    val candidateDirs = st.withColumn("dir", dirCol)
-      .withColumn("ovl",
-        col("min_ts") < max("max_ts").over(win))
-      .groupBy("dir").agg(
-        count(lit(1)).as("nf"), sum("rows").as("nr"),
-        max(when(col("ovl"), 1).otherwise(0)).as("anyovl"))
-      .where(col("nf") =!=
-        greatest(lit(1L), ceil(col("nr") / lit(targetFileRows.toDouble))) ||
-        col("anyovl") === 1)
-      .select("dir")
-    val stats = st.withColumn("dir", dirCol)
-      .join(broadcast(candidateDirs), "dir").drop("dir")
-      .collect().map(r =>
-        FileRange(r.getAs[String]("file"), r.getAs[Long]("rows"),
-          Option(r.getAs[Timestamp]("min_ts")),
-          Option(r.getAs[Timestamp]("max_ts"))))
-    lastCompactPlan = PlanProbe(before, stats.length.toLong)
-    val byDir = stats.groupBy(f => dirOf(lake, table, f.file))
-    // a dir needs work when its file count differs from what the
-    // target size implies (too many small files OR too-large files) or
-    // its file time-ranges overlap. "length > 1" alone would rewrite
-    // every large multi-file dir on every run — compaction must reach
-    // a fixed point, or post-collect auto-compaction rewrites the
-    // whole table after each ingest batch. (Exact predicate, re-run on
-    // the pre-filtered candidates — the DataFrame filter above may
-    // only over-approximate.)
-    val work = byDir.filter { case (_, fs) =>
-      val rows = fs.map(_.rows).sum
-      val ideal = math.max(1, math.ceil(rows.toDouble / targetFileRows).toInt)
-      fs.length != ideal || hasOverlap(fs.toSeq)
-    }
+    // The plan is a driver-side fold over the live manifest rows the
+    // driver already holds (the reference's sweep runs in its catalog
+    // the same way, partition_key.go:96-170): no Spark job, so a table
+    // at its compaction fixed point costs one manifest read. A dir
+    // needs work when its file count differs from what the target size
+    // implies (too many small files OR too-large files) or its file
+    // time-ranges overlap. "length > 1" alone would rewrite every large
+    // multi-file dir on every run — compaction must reach a fixed
+    // point, or post-collect auto-compaction rewrites the whole table
+    // after each ingest batch.
+    val live = lake.liveFiles(spark, table)
+    val before = live.size.toLong
+    val work = live
+      .map(r => FileRange(r.file, r.rows, r.minTs, r.maxTs))
+      .groupBy(f => dirOf(lake, table, f.file))
+      .filter { case (_, fs) =>
+        val rows = fs.map(_.rows).sum
+        val ideal = math.max(1, math.ceil(rows.toDouble / targetFileRows).toInt)
+        fs.length != ideal || hasOverlap(fs)
+      }
+    lastCompactPlan = PlanProbe(before, work.values.map(_.length).sum.toLong)
     if (work.isEmpty) return (before, before)
 
     // Two rewrite regimes, split by per-dir volume (partition_stress
@@ -225,35 +199,27 @@ object Maintenance {
       anchorUs: Long = 0L): (Long, Long) = lake.locked(table) {
     require(grainUs > 0, "compactAligned: grain must be positive")
     replayPendingRemovals(spark, lake, table)
-    val st = lake.fileStats(spark, table)
-    val before = st.count()
-    val dirCol = regexp_replace(col("file"), "/[^/]*$", "")
-    // bucket ids of each file's manifest range: floor division, exact
-    // in double (micros stay under 2^53 through year ~2255 and every
-    // supported grain's quotient boundary sits > half-ulp away); an
-    // all-null-ts file has null ids and counts as its own bucket
-    def bucketOf(c: String) =
-      floor((unix_micros(col(c)) - lit(anchorUs)) /
-        lit(grainUs.toDouble)).cast("long")
+    val live = lake.liveFiles(spark, table)
+    val before = live.size.toLong
+    // bucket ids of each file's manifest range (floor division); an
+    // all-null-ts file has no ids and counts as its own bucket
+    def bucketOf(ts: Option[Timestamp]): Option[Long] = ts.map(t =>
+      Math.floorDiv(org.apache.spark.sql.catalyst.util.DateTimeUtils
+        .fromJavaTimestamp(t) - anchorUs, grainUs))
     // NOTE: a file can never MIX null and non-null ts rows here — the
     // enrich path derives tp_year/tp_month from tp_timestamp, so null
     // rows route to the null-partition dirs at write time; ranged
     // files are therefore null-free and the bucket rule's tsNulls==0
     // proof holds for every aligned output automatically.
-    val perFile = st.withColumn("dir", dirCol)
-      .withColumn("b1", bucketOf("min_ts"))
-      .withColumn("b2", bucketOf("max_ts"))
-    val work: Array[String] = perFile.groupBy("dir")
-      .agg(
-        max(when(not(col("b1") <=> col("b2")), 1).otherwise(0))
-          .as("strad"),
-        count(lit(1)).as("nf"),
-        (count_distinct(col("b1")) +
-          max(when(col("b1").isNull, 1L).otherwise(0L))).as("nb"))
-      .where(col("strad") === 1 || col("nf") > col("nb"))
-      .select("dir").collect().map(_.getString(0))
-    if (work.isEmpty) return (before, before)
-    val relDirs = work.map(d => lake.relOf(table, d)).toSeq
+    // A dir needs work when a file straddles buckets or two files share
+    // one (a driver-side fold over the live manifest rows, no Spark job).
+    val relDirs: Seq[String] = live.groupBy(r => dirOf(lake, table, r.file))
+      .collect { case (dir, fs)
+          if fs.exists(r => bucketOf(r.minTs) != bucketOf(r.maxTs)) ||
+            fs.map(r => bucketOf(r.minTs)).distinct.length < fs.length =>
+        dir
+      }.toSeq
+    if (relDirs.isEmpty) return (before, before)
     val beforeInWork = lake.dataFilesUnder(spark, table, relDirs).size.toLong
     val dirVals = relDirs.map(lake.partitionValues)
     val base = scopeToDirs(lake.read(spark, table), dirVals)

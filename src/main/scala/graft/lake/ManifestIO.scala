@@ -41,12 +41,22 @@ import org.apache.spark.sql.catalyst.util.DateTimeUtils
   *    committer's rename), byte-compatible with the Spark-written
   *    manifest schema so old and new files mix freely.
   *  - [[readManifest]] / [[maxSeq]]: direct reads of the manifest rows
-  *    (both INT96- and INT64-timestamp vintages); maxSeq comes from
-  *    footer stats alone — no data pages touched.
+  *    (both INT96- and INT64-timestamp vintages), one pooled open per
+  *    part; maxSeq comes from footer stats alone — no data pages
+  *    touched. [[latestRows]] / [[liveRows]] are the one newest-row-
+  *    per-file reconciliation every manifest consumer applies.
+  *  - [[writeColStats]] / [[readColStats]]: the `_graft_colstats`
+  *    sidecar's writer and newest-per-(file, column) reader, on the same
+  *    footing. The writer lays rows out in the schema Spark's own writer
+  *    produced for the sidecar (so `spark.read.parquet` consumers keep
+  *    working on mixed dirs); the reader accepts every vintage (pre-KLL,
+  *    pre-`sum_v`, pre-`mg`). Metadata snapshots, sidecar compaction and
+  *    per-append stats rows all go through them — no Spark job.
   *
   * Everything here is exact-equivalence plumbing: ManifestIOSpec pins
   * footer stats == scan stats (including all-null and null-mixed
-  * timestamp files) and write→Spark-read round-trips.
+  * timestamp files) and write→Spark-read round-trips for both the
+  * manifest and the sidecar.
   */
 private[lake] object ManifestIO {
 
@@ -69,37 +79,169 @@ private[lake] object ManifestIO {
     */
   def writeManifest(
       conf: Configuration, dir: String,
-      rows: Seq[MRow]): Unit = {
+      rows: Seq[MRow]): Unit =
+    writeParts(conf, dir, ManifestSchema, rows) { (g, r) =>
+      g.append("file", Binary.fromString(r.file))
+      g.append("rows", r.rows)
+      r.minTs.foreach(t => g.append("min_ts", DateTimeUtils.fromJavaTimestamp(t)))
+      r.maxTs.foreach(t => g.append("max_ts", DateTimeUtils.fromJavaTimestamp(t)))
+      g.append("seq", r.seq)
+    }
+
+  /** One parquet part of `rows` in `dir`: tmp name, rename, then the
+    * `_SUCCESS` marker a complete Spark-written dir carries.
+    */
+  private def writeParts[R](
+      conf: Configuration, dir: String, schema: MessageType,
+      rows: Seq[R])(fill: (Group, R) => Unit): Unit = {
     val uuid = java.util.UUID.randomUUID().toString
     val tmp = new Path(s"$dir/.part-$uuid.snappy.parquet.tmp")
     val dst = new Path(s"$dir/part-$uuid-graft.snappy.parquet")
     val writer = ExampleParquetWriter.builder(
         org.apache.parquet.hadoop.util.HadoopOutputFile.fromPath(tmp, conf))
       .withConf(conf)
-      .withType(ManifestSchema)
+      .withType(schema)
       .withCompressionCodec(CompressionCodecName.SNAPPY)
       .build()
-    val gf = new SimpleGroupFactory(ManifestSchema)
+    val gf = new SimpleGroupFactory(schema)
     try rows.foreach { r =>
       val g = gf.newGroup()
-      g.append("file", Binary.fromString(r.file))
-      g.append("rows", r.rows)
-      r.minTs.foreach(t => g.append("min_ts", DateTimeUtils.fromJavaTimestamp(t)))
-      r.maxTs.foreach(t => g.append("max_ts", DateTimeUtils.fromJavaTimestamp(t)))
-      g.append("seq", r.seq)
+      fill(g, r)
       writer.write(g)
     } finally writer.close()
     val fs = dst.getFileSystem(conf)
     if (!fs.rename(tmp, dst)) {
       fs.delete(tmp, false)
-      throw new java.io.IOException(s"manifest rename failed: $tmp -> $dst")
+      throw new java.io.IOException(s"metadata rename failed: $tmp -> $dst")
     }
-    // preserve the Spark-writer invariant that a COMPLETE manifest dir
+    // preserve the Spark-writer invariant that a COMPLETE metadata dir
     // carries a _SUCCESS marker — healSwapAsides discriminates a
     // finished `_new` from a partial one by exactly this file
     val marker = new Path(s"$dir/_SUCCESS")
     if (!fs.exists(marker)) fs.create(marker, true).close()
   }
+
+  /** One `_graft_colstats` sidecar row: per-file, per-column stats
+    * (HLL sketch, null/row counts, string lengths, numeric and string
+    * ranges, KLL and frequent-items blobs, integral value sum).
+    */
+  final case class CRow(
+      file: String, column: String, sketch: Option[Array[Byte]],
+      nulls: Long, n: Long,
+      sumLen: Option[Long], maxLen: Option[Long],
+      minD: Option[Double], maxD: Option[Double],
+      minS: Option[String], maxS: Option[String],
+      kll: Option[Array[Byte]], mg: Option[Array[Byte]],
+      sumV: Option[BigInt], seq: Long)
+
+  /** The sidecar schema exactly as Spark's writer lays it out for the
+    * stats DataFrame (decimal(38,0) as a 16-byte FLBA), so direct-written
+    * and Spark-written parts mix under `spark.read.parquet`.
+    */
+  private val ColStatsSchema: MessageType = MessageTypeParser.parseMessageType(
+    """message spark_schema {
+      |  optional binary file (UTF8);
+      |  required binary column (UTF8);
+      |  required binary sketch;
+      |  optional int64 nulls;
+      |  required int64 n;
+      |  optional int64 sum_len;
+      |  optional int64 max_len;
+      |  optional double min_d;
+      |  optional double max_d;
+      |  optional binary min_s (UTF8);
+      |  optional binary max_s (UTF8);
+      |  optional binary kll;
+      |  optional binary mg;
+      |  optional fixed_len_byte_array(16) sum_v (DECIMAL(38,0));
+      |  required int64 seq;
+      |}""".stripMargin)
+
+  /** Write one sidecar part with `rows` into `dir` (same tmp + rename +
+    * `_SUCCESS` contract as [[writeManifest]]).
+    */
+  def writeColStats(
+      conf: Configuration, dir: String, rows: Seq[CRow]): Unit =
+    writeParts(conf, dir, ColStatsSchema, rows) { (g, r) =>
+      g.append("file", Binary.fromString(r.file))
+      g.append("column", Binary.fromString(r.column))
+      r.sketch.foreach(b => g.append("sketch", Binary.fromConstantByteArray(b)))
+      g.append("nulls", r.nulls)
+      g.append("n", r.n)
+      r.sumLen.foreach(g.append("sum_len", _))
+      r.maxLen.foreach(g.append("max_len", _))
+      r.minD.foreach(g.append("min_d", _))
+      r.maxD.foreach(g.append("max_d", _))
+      r.minS.foreach(v => g.append("min_s", Binary.fromString(v)))
+      r.maxS.foreach(v => g.append("max_s", Binary.fromString(v)))
+      r.kll.foreach(b => g.append("kll", Binary.fromConstantByteArray(b)))
+      r.mg.foreach(b => g.append("mg", Binary.fromConstantByteArray(b)))
+      r.sumV.foreach(v => g.append("sum_v", decimal16(v)))
+      g.append("seq", r.seq)
+    }
+
+  /** Big-endian two's complement, sign-extended to the 16 bytes a
+    * DECIMAL(38,0) FLBA holds.
+    */
+  private def decimal16(v: BigInt): Binary = {
+    val raw = v.toByteArray
+    require(raw.length <= 16, s"colstats sum_v $v exceeds DECIMAL(38,0)")
+    val out = Array.fill[Byte](16)(if (v.signum < 0) -1 else 0)
+    System.arraycopy(raw, 0, out, 16 - raw.length, raw.length)
+    Binary.fromConstantByteArray(out)
+  }
+
+  /** Newest-seq sidecar row per (file, column) under `dir`. Reads every
+    * vintage: pre-KLL (no `kll`), pre-`sum_v` and pre-`mg` parts yield
+    * None for the absent field, and `sum_v` decodes from whichever
+    * physical decimal encoding the part carries.
+    */
+  def readColStats(conf: Configuration, dir: String): Seq[CRow] =
+    parMap(manifestParts(conf, dir))(readColStatsFile(conf, _)).flatten
+      .groupBy(r => (r.file, r.column)).valuesIterator
+      .map(_.maxBy(_.seq)).toSeq
+
+  private def readColStatsFile(conf: Configuration, file: Path): Seq[CRow] = {
+    val reader = ParquetReader.builder(new GroupReadSupport(), file)
+      .withConf(conf).build()
+    val out = Seq.newBuilder[CRow]
+    try {
+      var g: Group = reader.read()
+      while (g != null) {
+        def has(f: String): Boolean =
+          g.getType.containsField(f) && g.getFieldRepetitionCount(f) > 0
+        def long(f: String): Option[Long] =
+          if (has(f)) Some(g.getLong(f, 0)) else None
+        def dbl(f: String): Option[Double] =
+          if (has(f)) Some(g.getDouble(f, 0)) else None
+        def str(f: String): Option[String] =
+          if (has(f)) Some(g.getString(f, 0)) else None
+        def bytes(f: String): Option[Array[Byte]] =
+          if (has(f)) Some(g.getBinary(f, 0).getBytes) else None
+        out += CRow(
+          str("file").orNull, g.getString("column", 0),
+          bytes("sketch"),
+          long("nulls").getOrElse(0L), g.getLong("n", 0),
+          long("sum_len"), long("max_len"),
+          dbl("min_d"), dbl("max_d"), str("min_s"), str("max_s"),
+          bytes("kll"), bytes("mg"),
+          if (has("sum_v")) Some(decimalField(g, "sum_v")) else None,
+          g.getLong("seq", 0))
+        g = reader.read()
+      }
+    } finally reader.close()
+    out.result()
+  }
+
+  /** Unscaled value of a scale-0 decimal field in any of parquet's
+    * physical encodings (FLBA / binary big-endian, or int32/int64).
+    */
+  private def decimalField(g: Group, name: String): BigInt =
+    g.getType.getType(name).asPrimitiveType.getPrimitiveTypeName match {
+      case PrimitiveType.PrimitiveTypeName.INT32 => BigInt(g.getInteger(name, 0))
+      case PrimitiveType.PrimitiveTypeName.INT64 => BigInt(g.getLong(name, 0))
+      case _ => BigInt(g.getBinary(name, 0).getBytes)
+    }
 
   /** Data-file names within `dir` eligible as manifest parts (the same
     * hidden-file rule every Spark scan applies).
@@ -121,7 +263,20 @@ private[lake] object ManifestIO {
     * default) and INT64 TIMESTAMP(MICROS) (direct-written).
     */
   def readManifest(conf: Configuration, dir: String): Seq[MRow] =
-    manifestParts(conf, dir).flatMap(readManifestFile(conf, _))
+    parMap(manifestParts(conf, dir))(readManifestFile(conf, _)).flatten
+
+  /** The newest row per file (tombstones included): the one
+    * reconciliation every manifest consumer applies — a file's live
+    * stats, or its tombstone (`rows < 0`), is whichever row carries the
+    * highest `seq`.
+    */
+  def latestRows(conf: Configuration, dir: String): Seq[MRow] =
+    readManifest(conf, dir).groupBy(_.file).valuesIterator
+      .map(_.maxBy(_.seq)).toSeq
+
+  /** [[latestRows]] minus tombstoned files: the live file set. */
+  def liveRows(conf: Configuration, dir: String): Seq[MRow] =
+    latestRows(conf, dir).filter(_.rows >= 0L)
 
   private def readManifestFile(conf: Configuration, file: Path): Seq[MRow] = {
     val reader = ParquetReader.builder(new GroupReadSupport(), file)
@@ -242,14 +397,6 @@ private[lake] object ManifestIO {
       } finally r.close()
     } catch { case _: Exception => None }
 
-  /** Per-file (rows, min/max of `tsCol`) from parquet footers — the
-    * exact values the old scan computed (row count includes null-ts
-    * rows; min/max over non-null values; all-null file → (None, None)).
-    * Returns None when ANY file's footer cannot prove the answer
-    * (missing column, non-INT64-micros physical type, absent or
-    * untrustworthy stats) — the caller then scans, as before. Files
-    * with zero rows are skipped, matching the scan's groupBy semantics.
-    */
   /** Run `body` over `items` on a bounded thread pool (footer reads
     * are ~ms of CPU + one small I/O each, but a local ChecksumFS open
     * costs ~10 ms of latency — 84 serial opens after a compaction
@@ -285,6 +432,14 @@ private[lake] object ManifestIO {
     } finally pool.shutdown()
   }
 
+  /** Per-file (rows, min/max of `tsCol`) from parquet footers — the
+    * exact values the old scan computed (row count includes null-ts
+    * rows; min/max over non-null values; all-null file → (None, None)).
+    * Returns None when ANY file's footer cannot prove the answer
+    * (missing column, non-INT64-micros physical type, absent or
+    * untrustworthy stats) — the caller then scans, as before. Files
+    * with zero rows are skipped, matching the scan's groupBy semantics.
+    */
   def footerStats(
       conf: Configuration, files: Seq[String], tsCol: String)
       : Option[Seq[(String, Long, Option[Timestamp], Option[Timestamp])]] = {

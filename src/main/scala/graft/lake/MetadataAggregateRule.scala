@@ -57,9 +57,9 @@ import org.apache.spark.sql.types.{IntegerType, LongType, StringType}
   *    otherwise the rule DECLINES rather than scan at optimize time,
   *    and the query runs its normal plan
   *
-  * The metadata probe itself is metadata-sized (a manifest read and
-  * one sidecar aggregate) and runs only after the full structural
-  * match, so non-candidate queries pay a pattern match and nothing
+  * The metadata probe itself is metadata-sized (driver-side manifest
+  * and sidecar reads, no Spark job) and runs only after the full
+  * structural match, so non-candidate queries pay a pattern match and nothing
   * else. The rewrite replaces the aggregate with a one-row
   * [[LocalRelation]] carrying the same attribute ids, types and
   * nullability, so downstream operators and reuse are unaffected.
@@ -470,8 +470,8 @@ final case class MetadataAggregateRule(session: SparkSession)
     val kllCols = flat.collect { case QuantileCol(a, _) => a.name }.toSet
     val mgCols = flat.collect { case TopKCol(a, _) => a.name }.toSet
     val parts = lake.statsAggregateIfCovered(session, table, cols,
-      rangeCols, sumCols, ndvCols, fileFilter, kllCols, mgCols)
-      .getOrElse(return None)
+      rangeCols, sumCols, ndvCols, fileFilter, kllCols, mgCols,
+      countedCols(flat)).getOrElse(return None)
     // a sum past Long.MaxValue has no exact BIGINT value — decline
     if (!flat.collect { case SumCol(a) => a.name }.forall(c =>
       parts.sums.get(c).forall(_.isValidLong))) return None
@@ -1655,7 +1655,8 @@ final case class MetadataAggregateRule(session: SparkSession)
     val mgCols = flat.collect { case TopKCol(a, _) => a.name }.toSet
     val groups = lake.statsAggregateGroupedIfCovered(session, table,
       groupAttrs.map(_.name), cols, rangeCols, sumCols, ndvCols,
-      fileFilter, kllCols, mgCols).getOrElse(return None)
+      fileFilter, kllCols, mgCols, countedCols(flat))
+      .getOrElse(return None)
     // any group's sum past Long.MaxValue (or avg sum past 2^53):
     // decline the whole rewrite
     val sumOnly = flat.collect { case SumCol(a) => a.name }.toSet
@@ -2000,6 +2001,15 @@ object MetadataAggregateRule {
   private final case class NdvCol(a: AttributeReference) extends Spec
   private final case class QuantileCol(
       a: AttributeReference, p: Double) extends Spec
+
+  /** Columns whose `count` the rewrite reads (count and avg outputs);
+    * a column only min/max'd needs no null counts.
+    */
+  private def countedCols(specs: Seq[Spec]): Set[String] =
+    specs.collect {
+      case CountCol(a) => a.name
+      case AvgCol(a) => a.name
+    }.toSet
 
   /** Exactness bound for serving `avg`: with |exact sum| <= 2^53 the
     * BigInt→double conversion is lossless and any per-row double
