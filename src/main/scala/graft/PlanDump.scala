@@ -3,7 +3,9 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** Optimization-round deliverable helper: dump `.explain("formatted")`
-  * of named queries to `<outDir>/<query>_<tag>.txt` (plans/r19/...).
+  * of named queries to `<outDir>/<query>_<tag>.txt` (plans/r19/...),
+  * then run each query and append the number of data files its scans
+  * read, so before/after dumps show whether a change moved any I/O.
   * Not part of the driver contract.
   *
   * Usage: runMain graft.PlanDump <sfDir> <outDir> <tag> <q1>[,<q2>...]
@@ -23,8 +25,10 @@ object PlanDump {
     for (name <- names.split(",").map(_.trim).filter(_.nonEmpty)) {
       try {
         val df = SparkEntry.queries(name)(spark, sfDir)
-        val txt = df.queryExecution.explainString(
+        val plan = df.queryExecution.explainString(
           org.apache.spark.sql.execution.FormattedMode)
+        val txt = plan +
+          s"\nfiles read: ${graft.query.ScanAudit.filesReadAfterRun(df)}\n"
         java.nio.file.Files.write(
           java.nio.file.Paths.get(s"$outDir/${name}_$tag.txt"),
           txt.getBytes("UTF-8"))

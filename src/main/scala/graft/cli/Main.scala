@@ -1749,7 +1749,7 @@ object Main {
       // file straddles a bucket boundary, so GROUP-BY-time-bucket
       // reports serve fully from metadata afterwards
       val align = opts.flag("align").map { a =>
-        val day = 86400000000L
+        val day = graft.lake.TpSchema.DayUs
         a.toLowerCase(java.util.Locale.ROOT) match {
           case "day"    => (day, 0L)
           case "hour"   => (3600000000L, 0L)
@@ -2063,8 +2063,9 @@ object Main {
           import org.apache.spark.sql.functions.{col, lit}
           val whole = opts.ts("from").isEmpty && opts.ts("to").isEmpty
           val unioned =
-            if (whole) lake.statsAggregateIfCovered(spark, t, cols,
-              Set.empty, Set.empty, cols.toSet).map(_.ndvs)
+            if (whole) lake.metaAggregate(spark, t,
+              graft.lake.Lake.ColumnNeeds(ndv = cols.toSet))
+              .flatMap(_.covered).map(_.ndvs)
             else None
           val est: Map[String, Long] = unioned.getOrElse {
             val base = lake.read(spark, t)
@@ -2100,12 +2101,8 @@ object Main {
                 f.map(_.getTime * 1000L).getOrElse(Long.MinValue),
                 to0.map(_.getTime * 1000L).getOrElse(Long.MaxValue)))
             }
-          val served: Option[Long] = band match {
-            case None => lake.distinctDayCounts(spark, t, _ => Nil,
-              _ => true).map(_.values.headOption.getOrElse(0L))
-            case Some(b) =>
-              lake.distinctDayCountsBanded(spark, t, Seq(b), _ => true)
-          }
+          val served: Option[Long] = lake.distinctDayCount(spark, t,
+            Seq(band.getOrElse(graft.lake.Lake.FullRange)))
           val n = served.getOrElse {
             val base = lake.read(spark, t)
             val banded = band match {
@@ -2137,10 +2134,9 @@ object Main {
               org.apache.spark.sql.types.StringType)
           val merged =
             if (opts.ts("from").isEmpty && opts.ts("to").isEmpty)
-              lake.statsAggregateIfCovered(spark, t, strCols,
-                Set.empty, Set.empty, Set.empty, _ => true,
-                Set.empty, strCols.toSet)
-                .map(_.mgBlobs)
+              lake.metaAggregate(spark, t,
+                graft.lake.Lake.ColumnNeeds(topk = strCols.toSet))
+                .flatMap(_.covered).map(_.mgBlobs)
                 .filter(_.values.forall(b =>
                   graft.functions.TopKFns.isExact(
                     graft.functions.TopKFns.fromBlob(b))))
@@ -2185,9 +2181,9 @@ object Main {
               org.apache.spark.sql.types.NumericType])
           val whole = opts.ts("from").isEmpty && opts.ts("to").isEmpty
           val merged =
-            if (whole) lake.statsAggregateIfCovered(spark, t, numCols,
-              Set.empty, Set.empty, Set.empty, _ => true,
-              numCols.toSet).map(_.kllBlobs)
+            if (whole) lake.metaAggregate(spark, t,
+              graft.lake.Lake.ColumnNeeds(kll = numCols.toSet))
+              .flatMap(_.covered).map(_.kllBlobs)
             else None
           val rows: Map[String, Seq[Option[Double]]] = merged match {
             case Some(blobs) => numCols.map(c => c -> ps.map(p =>

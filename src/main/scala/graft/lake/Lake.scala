@@ -1456,39 +1456,80 @@ final case class Lake(root: String, manifestCompactThreshold: Int = 64)
       columns: Seq[String]): DataFrame =
     statsAggregateAudited(spark, table, columns)._1
 
-  import Lake.StatsAggParts
+  import Lake.{ColumnNeeds, MetaAggProbe, StatsAggParts, TimeSplit}
 
-  /** Metadata-only answer when EVERY live file is covered; None when a
-    * residual scan would be needed (or the table has no data). Reads
-    * only metadata, on the driver — safe to call from an optimizer rule.
-    * `columns` may be empty (a pure `count(*)`: manifest row counts +
-    * the unrecorded-file check). `rangeColumns` is the subset whose
-    * min/max is actually wanted — a count-only column (say a decimal
-    * or a struct) needs just the sidecar's null/row counts, and
-    * demanding zone ranges for it would decline queries the metadata
-    * CAN answer.
+  /** Sort a table's live files for one metadata aggregate — the single
+    * classification behind [[MetadataAggregateRule]], the audited
+    * aggregates below and the CLI's `table aggregate`. Reads only
+    * metadata, on the driver (safe to call from an optimizer rule).
+    *
+    *  - `time = None`: every live file passing `fileFilter` is a
+    *    candidate.
+    *  - `time = Some(split)`: files the manifest proves outside every
+    *    band drop out. A candidate lies inside ONE band (a file spanning
+    *    two bands has gap rows that fail the predicate), inside one
+    *    bucket of `split.bucketIdOf` when given, and is proven
+    *    null-ts-free by the sidecar (a null-ts row fails every band but
+    *    counts in the manifest's rows). Every other overlapping file,
+    *    including one with an unknown range, straddles.
+    *
+    * A candidate the manifest and sidecar cannot answer for `needs`
+    * straddles too; the rest contribute metadata partials per
+    * `groupOf` key, prefixed with the bucket id when bucketed. None
+    * when the table has no data or lacks a needed column.
+    */
+  private[graft] def metaAggregate(
+      spark: SparkSession, table: String, needs: ColumnNeeds,
+      groupOf: String => Seq[String] = _ => Nil,
+      fileFilter: String => Boolean = _ => true,
+      time: Option[TimeSplit] = None): Option[MetaAggProbe] = {
+    if (!hasData(spark, table)) return None
+    val schema = schemaOf(spark, table)
+    if (!needs.columns.forall(schema.fieldNames.contains)) return None
+    // live truth = the LISTING; manifest/sidecar rows come from the
+    // per-mutation MetaSnapshot (one token probe per query)
+    val snap = metaSnapshot(spark, table)
+    val live = dataFiles(spark, table).filter(fileFilter)
+    val (candidates, straddling, keyOf) = time match {
+      case None => (live, Nil, groupOf)
+      case Some(TimeSplit(bands, bucketIdOf)) =>
+        def range(f: String) = snap.manifest.get(f).map(m => (m.minUs, m.maxUs))
+        val overlapping = live.filterNot(f => range(f) match {
+          case Some((Some(mn), Some(mx))) =>
+            bands.forall { case (lo, hi) => mx < lo || mn > hi }
+          case _ => false // unknown range: must consider it
+        })
+        // bucket ids are MONOTONE in micros (BucketGrain contract), so
+        // equal ids at the range ends put every row in one bucket
+        val (inside, edge) = overlapping.partition(f => range(f) match {
+          case Some((Some(mn), Some(mx))) =>
+            bands.exists { case (lo, hi) => mn >= lo && mx <= hi } &&
+              bucketIdOf.forall(id => id(mn) == id(mx)) &&
+              snap.tsNulls.get(f).contains(0L)
+          case _ => false
+        })
+        (inside, edge, bucketIdOf.fold(groupOf)(id => (f: String) =>
+          id(snap.manifest(f).minUs.get).toString +: groupOf(f)))
+    }
+    val (groups, uncovered) =
+      statsAggPartsGrouped(spark, table, snap, candidates, needs, schema, keyOf)
+    Some(MetaAggProbe(groups.toSeq, straddling ++ uncovered,
+      candidates.size - uncovered.size))
+  }
+
+  /** Metadata-only ungrouped answer when EVERY live file is covered;
+    * None when a scan would be needed (or the table has no data).
+    * `rangeColumns` is the subset whose min/max is wanted — a
+    * count-only column (say a decimal or a struct) needs just the
+    * sidecar's null/row counts.
     */
   private[graft] def statsAggregateIfCovered(
       spark: SparkSession, table: String,
       columns: Seq[String],
       rangeColumns: Set[String],
-      sumColumns: Set[String] = Set.empty,
-      ndvColumns: Set[String] = Set.empty,
-      fileFilter: String => Boolean = _ => true,
-      kllColumns: Set[String] = Set.empty,
-      mgColumns: Set[String] = Set.empty,
-      countedColumns: String => Boolean = _ => true)
-      : Option[StatsAggParts] = {
-    if (!hasData(spark, table)) return None
-    val schema = schemaOf(spark, table)
-    if (!columns.forall(schema.fieldNames.contains)) return None
-    val (groups, residual) = statsAggPartsGrouped(spark, table, columns,
-      schema, rangeColumns, sumColumns, _ => Nil, fileFilter,
-      ndvColumns, kllColumns, mgColumns, countedColumns)
-    if (residual.nonEmpty) None
-    else Some(groups.values.headOption.getOrElse(
-      StatsAggParts(0L, Map.empty, Map.empty, Map.empty, Map.empty, Nil)))
-  }
+      sumColumns: Set[String] = Set.empty): Option[StatsAggParts] =
+    metaAggregate(spark, table, ColumnNeeds(counted = columns.toSet,
+      ranged = rangeColumns, summed = sumColumns)).flatMap(_.covered)
 
   /** [[statsAggregate]] plus the audit trail: the residual files the
     * metadata could not answer for (empty = the aggregate was served
@@ -1509,21 +1550,73 @@ final case class Lake(root: String, manifestCompactThreshold: Int = 64)
   def statsAggregateAudited(
       spark: SparkSession, table: String,
       columns: Seq[String],
-      withSums: Boolean): (DataFrame, Seq[String]) = {
-    require(columns.nonEmpty, "statsAggregate: no columns given")
+      withSums: Boolean): (DataFrame, Seq[String]) =
+    auditedAggregate(spark, table, columns, withSums, band = None)
+
+  /** TIME-BAND hybrid aggregate — the reference's dominant query shape
+    * (`--from/--to`) answered mostly from metadata: files whose
+    * manifest `[min_ts, max_ts]` lies FULLY inside `[from, to]`
+    * contribute their counts/sums/ranges from the manifest + sidecar
+    * (every row of a contained file passes the band predicate, so the
+    * whole-file statistics apply verbatim); only files STRADDLING a
+    * band edge are scanned, with the row-level band filter applied.
+    *
+    * Containment additionally requires the sidecar to prove
+    * `tp_timestamp` null-free for the file (see [[metaAggregate]]) —
+    * enable stats on `tp_timestamp` to arm the fast path; without it
+    * every overlapping file scans (correct, just not accelerated).
+    * Returns the same one-row shape as [[statsAggregateAudited]] plus
+    * the audit: the files actually scanned.
+    */
+  def timeBandAggregateAudited(
+      spark: SparkSession, table: String,
+      from: Timestamp, to: Timestamp,
+      columns: Seq[String]): (DataFrame, Seq[String]) =
+    timeBandAggregateAudited(spark, table, from, to, columns,
+      withSums = true)
+
+  /** See [[statsAggregateAudited]]'s `withSums` — same contract. */
+  def timeBandAggregateAudited(
+      spark: SparkSession, table: String,
+      from: Timestamp, to: Timestamp,
+      columns: Seq[String],
+      withSums: Boolean): (DataFrame, Seq[String]) =
+    auditedAggregate(spark, table, columns, withSums, Some((from, to)))
+
+  /** Both audited aggregates: the metadata partial over the covered
+    * (and, with a band, contained) files, plus ONE aggregate job over
+    * exactly the files it leaves, restricted to the band row-level.
+    * Long columns whose stored double bounds reach 2^53, unsupported
+    * min/max types and live files the manifest never recorded all land
+    * in that residual scan, so the answer is exact either way.
+    */
+  private def auditedAggregate(
+      spark: SparkSession, table: String,
+      columns: Seq[String], withSums: Boolean,
+      band: Option[(Timestamp, Timestamp)]): (DataFrame, Seq[String]) = {
+    val what = if (band.isEmpty) "statsAggregate" else "timeBandAggregate"
+    require(columns.nonEmpty, s"$what: no columns given")
     require(hasData(spark, table),
-      s"statsAggregate: table '$table' has no data files")
+      s"$what: table '$table' has no data files")
+    band.foreach { case (from, to) =>
+      require(!from.after(to), s"$what: from > to") }
     val schema = schemaOf(spark, table)
     columns.foreach(c => require(schema.fieldNames.contains(c),
-      s"statsAggregate: table '$table' has no column '$c'"))
+      s"$what: table '$table' has no column '$c'"))
     def dtOf(c: String): DataType = schema(c).dataType
-    def integral(c: String): Boolean = dtOf(c) match {
+    val sumCols = if (!withSums) Nil else columns.filter(c => dtOf(c) match {
       case ByteType | ShortType | IntegerType | LongType => true
       case _ => false
-    }
-    val sumCols = if (withSums) columns.filter(integral) else Nil
-    val parts = statsAggParts(spark, table, columns, schema,
-      rangeColumns = columns.toSet, sumColumns = sumCols.toSet)
+    })
+    def us(t: Timestamp): Long =
+      org.apache.spark.sql.catalyst.util.DateTimeUtils.fromJavaTimestamp(t)
+    val probe = metaAggregate(spark, table,
+      ColumnNeeds(counted = columns.toSet, ranged = columns.toSet,
+        summed = sumCols.toSet),
+      time = band.map { case (from, to) =>
+        TimeSplit(Seq((us(from), us(to)))) }).get
+    val parts = probe.groups.headOption.fold(StatsAggParts.empty)(_._2)
+    val residual = probe.straddlers
     var nRows: Long = parts.nRows
     val cnt = scala.collection.mutable.Map[String, Long]()
       .withDefaultValue(0L)
@@ -1531,17 +1624,21 @@ final case class Lake(root: String, manifestCompactThreshold: Int = 64)
     val mn = scala.collection.mutable.Map[String, Any]() ++ parts.mins
     val mx = scala.collection.mutable.Map[String, Any]() ++ parts.maxs
     val sm = scala.collection.mutable.Map[String, BigInt]() ++ parts.sums
-    def lt(dt: DataType, a: Any, b: Any): Boolean =
-      Lake.statsLt(dt, a, b)
     def merge(c: String, dt: DataType, lo: Any, hi: Any): Unit = {
-      if (lo != null && (!mn.contains(c) || lt(dt, lo, mn(c)))) mn(c) = lo
-      if (hi != null && (!mx.contains(c) || lt(dt, mx(c), hi))) mx(c) = hi
+      if (lo != null &&
+        (!mn.contains(c) || Lake.statsLt(dt, lo, mn(c)))) mn(c) = lo
+      if (hi != null &&
+        (!mx.contains(c) || Lake.statsLt(dt, mx(c), hi))) mx(c) = hi
     }
 
     // ---- residual scan: ONE aggregate job over exactly the gap ----
-    if (parts.residual.nonEmpty) {
-      val df = spark.read.option("basePath", tableDir(table))
-        .parquet(parts.residual: _*)
+    if (residual.nonEmpty) {
+      val all = spark.read.option("basePath", tableDir(table))
+        .parquet(residual: _*)
+      val df = band.fold(all) { case (from, to) =>
+        all.where(col(TpSchema.Timestamp) >= lit(from) &&
+          col(TpSchema.Timestamp) <= lit(to))
+      }
       val aggs = count(lit(1)).as("__n") +: columns.flatMap(c => Seq(
         count(col(c)).as(s"__c_$c"),
         min(col(c)).as(s"__mn_$c"), max(col(c)).as(s"__mx_$c"),
@@ -1576,465 +1673,62 @@ final case class Lake(root: String, manifestCompactThreshold: Int = 64)
     val out = spark.createDataFrame(
       java.util.Arrays.asList(Row.fromSeq(values)),
       StructType(fields))
-    (out, parts.residual)
+    (out, residual)
   }
 
-  /** TIME-BAND hybrid aggregate — the reference's dominant query shape
-    * (`--from/--to`) answered mostly from metadata: files whose
-    * manifest `[min_ts, max_ts]` lies FULLY inside `[from, to]`
-    * contribute their counts/sums/ranges from the manifest + sidecar
-    * (every row of a contained file passes the band predicate, so the
-    * whole-file statistics apply verbatim); only files STRADDLING a
-    * band edge are scanned, with the row-level band filter applied.
-    * For a month-wide band over a year of files, that is two boundary
-    * days of I/O instead of a month.
-    *
-    * Soundness: a contained file's manifest row count equals its
-    * in-band row count ONLY if the file holds no null-`tp_timestamp`
-    * rows (null fails the band but still counts in `rows`), so
-    * containment additionally requires the sidecar to prove
-    * `tp_timestamp` null-free for that file — enable stats on
-    * `tp_timestamp` to arm the fast path; without it every overlapping
-    * file scans (correct, just not accelerated). Files the zones
-    * prove fully OUTSIDE the band are excluded exactly as
-    * [[readPruned]] would skip them. Returns the same one-row shape as
-    * [[statsAggregateAudited]] plus the audit: the files actually
-    * scanned.
+  /** Distinct `tp_date` count inside `bands`, PROVABLE from the manifest
+    * alone ("how many active days"): every live file must be all-null-ts
+    * (no dates — SQL DISTINCT ignores nulls), provably outside every
+    * band, or inside one band and day-contained (its manifest ts range
+    * floors to ONE epoch day: its min row sits on that day and no row on
+    * another). A file cut by a band edge, a day straddler, a half-known
+    * range or an unrecorded live file → None: the set is not provable
+    * and the caller scans. The default band is the full range. Callers
+    * gate on the reader session being UTC (the tp_date convention).
     */
-  def timeBandAggregateAudited(
+  private[graft] def distinctDayCount(
       spark: SparkSession, table: String,
-      from: Timestamp, to: Timestamp,
-      columns: Seq[String]): (DataFrame, Seq[String]) =
-    timeBandAggregateAudited(spark, table, from, to, columns,
-      withSums = true)
-
-  /** See [[statsAggregateAudited]]'s `withSums` — same contract. */
-  def timeBandAggregateAudited(
-      spark: SparkSession, table: String,
-      from: Timestamp, to: Timestamp,
-      columns: Seq[String],
-      withSums: Boolean): (DataFrame, Seq[String]) = {
-    require(columns.nonEmpty, "timeBandAggregate: no columns given")
-    require(hasData(spark, table),
-      s"timeBandAggregate: table '$table' has no data files")
-    require(!from.after(to), "timeBandAggregate: from > to")
-    val schema = schemaOf(spark, table)
-    columns.foreach(c => require(schema.fieldNames.contains(c),
-      s"timeBandAggregate: table '$table' has no column '$c'"))
-    def dtOf(c: String): DataType = schema(c).dataType
-    def integral(c: String): Boolean = dtOf(c) match {
-      case ByteType | ShortType | IntegerType | LongType => true
-      case _ => false
-    }
-    val sumCols = if (withSums) columns.filter(integral) else Nil
-
-    val fromUs = org.apache.spark.sql.catalyst.util.DateTimeUtils
-      .fromJavaTimestamp(from)
-    val toUs = org.apache.spark.sql.catalyst.util.DateTimeUtils
-      .fromJavaTimestamp(to)
-    val (parts, toScan, _) = timeBandParts(spark, table, fromUs, toUs,
-      columns, schema, rangeColumns = columns.toSet,
-      sumColumns = sumCols.toSet)
-
-    var nRows: Long = parts.nRows
-    val cnt = scala.collection.mutable.Map[String, Long]()
-      .withDefaultValue(0L)
-    parts.counts.foreach { case (c, n) => cnt(c) = n }
-    val mn = scala.collection.mutable.Map[String, Any]() ++ parts.mins
-    val mx = scala.collection.mutable.Map[String, Any]() ++ parts.maxs
-    val sm = scala.collection.mutable.Map[String, BigInt]() ++ parts.sums
-    def merge(c: String, dt: DataType, lo: Any, hi: Any): Unit = {
-      if (lo != null &&
-        (!mn.contains(c) || Lake.statsLt(dt, lo, mn(c)))) mn(c) = lo
-      if (hi != null &&
-        (!mx.contains(c) || Lake.statsLt(dt, mx(c), hi))) mx(c) = hi
-    }
-    if (toScan.nonEmpty) {
-      val df = spark.read.option("basePath", tableDir(table))
-        .parquet(toScan: _*)
-        .where(col(TpSchema.Timestamp) >= lit(from) &&
-          col(TpSchema.Timestamp) <= lit(to))
-      val aggs = count(lit(1)).as("__n") +: columns.flatMap(c => Seq(
-        count(col(c)).as(s"__c_$c"),
-        min(col(c)).as(s"__mn_$c"), max(col(c)).as(s"__mx_$c"),
-        (if (sumCols.contains(c)) sum(col(c).cast("decimal(38,0)"))
-         else max(lit(null).cast("decimal(38,0)"))).as(s"__sv_$c")))
-      val r = df.agg(aggs.head, aggs.tail: _*).head()
-      nRows += r.getAs[Long]("__n")
-      columns.foreach { c =>
-        cnt(c) += r.getAs[Long](s"__c_$c")
-        merge(c, dtOf(c), r.getAs[Any](s"__mn_$c"), r.getAs[Any](s"__mx_$c"))
-        val sv = r.getAs[java.math.BigDecimal](s"__sv_$c")
-        if (sv != null)
-          sm(c) = sm.getOrElse(c, BigInt(0)) + BigInt(sv.toBigInteger)
-      }
-    }
-    val fields = StructField("n_rows", LongType, nullable = false) +:
-      (columns.flatMap { c =>
-        Seq(StructField(s"n_$c", LongType, nullable = false),
-          StructField(s"min_$c", dtOf(c)),
-          StructField(s"max_$c", dtOf(c)))
-      } ++ sumCols.map(c => StructField(s"sum_$c", LongType)))
-    val values: Seq[Any] = (nRows +: columns.flatMap(c =>
-      Seq(cnt(c), mn.get(c).orNull, mx.get(c).orNull))) ++
-      sumCols.map(c => sm.get(c).filter(_.isValidLong)
-        .map(v => Long.box(v.toLong)).orNull)
-    val out = spark.createDataFrame(
-      java.util.Arrays.asList(Row.fromSeq(values)),
-      StructType(fields))
-    (out, toScan)
-  }
-
-  /** Band classification + contained-file metadata partial, micros
-    * domain (Catalyst `TimestampType` internal units — what the SQL
-    * rewrite extracts from literals). Returns the partial over files
-    * PROVEN fully inside `[fromUs, toUs]` (manifest range contained,
-    * sidecar-proven null-ts-free, every requested column covered) and
-    * the files that must scan (straddlers + unproven + uncovered).
-    * Files the manifest proves fully outside are in neither. Unknown
-    * ranges scan — conservativeness as in [[readPruned]].
-    */
-  private[lake] def timeBandParts(
-      spark: SparkSession, table: String,
-      fromUs: Long, toUs: Long,
-      columns: Seq[String], schema: StructType,
-      rangeColumns: Set[String], sumColumns: Set[String],
-      fileFilter: String => Boolean = _ => true,
-      ndvColumns: Set[String] = Set.empty,
-      kllColumns: Set[String] = Set.empty)
-      : (StatsAggParts, Seq[String], Int) = {
-    val (groups, toScan, contained) = timeBandPartsGrouped(spark, table,
-      fromUs, toUs, columns, schema, rangeColumns, sumColumns,
-      _ => Nil, fileFilter, ndvColumns, kllColumns)
-    (groups.headOption.map(_._2).getOrElse(
-      StatsAggParts(0L, Map.empty, Map.empty, Map.empty, Map.empty,
-        Nil)),
-      toScan, contained)
-  }
-
-  /** MULTI-band twin of [[timeBandParts]] (r17 verdict task 6 — the
-    * OR-of-bands dashboard shape): `bands` are DISJOINT sorted closed
-    * micros intervals (the rule merges overlaps before calling). A
-    * file is contained iff its manifest range sits inside ONE band and
-    * it is proven null-ts-free — a file spanning two bands has rows in
-    * the gap that fail the predicate, so it scans; a file provably
-    * outside EVERY band is excluded entirely. One global partial over
-    * the contained files (their full row sets all satisfy the union).
-    */
-  private[lake] def timeMultiBandParts(
-      spark: SparkSession, table: String,
-      bands: Seq[(Long, Long)],
-      columns: Seq[String], schema: StructType,
-      rangeColumns: Set[String], sumColumns: Set[String],
-      fileFilter: String => Boolean,
-      ndvColumns: Set[String] = Set.empty,
-      kllColumns: Set[String] = Set.empty)
-      : (StatsAggParts, Seq[String], Int) = {
-    val (groups, toScan, contained) = timePartsGroupedCore(spark, table,
-      bands, bucketIdOf = None, columns, schema, rangeColumns, sumColumns,
-      _ => Nil, fileFilter, ndvColumns, kllColumns)
-    (groups.values.headOption.getOrElse(
-      StatsAggParts(0L, Map.empty, Map.empty, Map.empty, Map.empty,
-        Nil)),
-      toScan, contained)
-  }
-
-  /** Shared band/bucket classification core: files proven inside ONE
-    * of `bands` (closed micros intervals, disjoint) AND null-ts-free
-    * AND — when `bucketUs` is set — contained in one bucket of that
-    * grain, contribute metadata partials grouped by `groupOf` (with
-    * the bucket index prefixed when bucketed); everything else
-    * overlapping any band goes to the scan list, and files provably
-    * outside every band are excluded. Metadata-sized throughout (one
-    * snapshot probe + the listing).
-    */
-  private def timePartsGroupedCore(
-      spark: SparkSession, table: String,
-      bands: Seq[(Long, Long)], bucketIdOf: Option[Long => Long],
-      columns: Seq[String], schema: StructType,
-      rangeColumns: Set[String], sumColumns: Set[String],
-      groupOf: String => Seq[String],
-      fileFilter: String => Boolean,
-      ndvColumns: Set[String],
-      kllColumns: Set[String])
-      : (Map[Seq[String], StatsAggParts], Seq[String], Int) = {
-    val snap = metaSnapshot(spark, table)
-    val bounds: Map[String, (Option[Long], Option[Long])] =
-      snap.manifest.map { case (f, m) => f -> (m.minUs, m.maxUs) }
-    val tsNulls: Map[String, Long] = snap.tsNulls
-    val live = dataFiles(spark, table).filter(fileFilter)
-    val overlapping = live.filterNot { f =>
-      bounds.get(f) match {
-        case Some((Some(mn), Some(mx))) =>
-          bands.forall { case (lo, hi) => mx < lo || mn > hi }
-        case _ => false // unknown range: must consider it
-      }
-    }
-    // bucket id functions are MONOTONE in micros (BucketGrain
-    // contract), so equal ids at the range ends prove every row in
-    // between shares the bucket — for calendar grains exactly as for
-    // fixed widths
-    def bucketOk(mn: Long, mx: Long): Boolean =
-      bucketIdOf.forall(idOf => idOf(mn) == idOf(mx))
-    val contained: Set[String] = overlapping.filter { f =>
-      bounds.get(f) match {
-        case Some((Some(mn), Some(mx))) =>
-          bands.exists { case (lo, hi) => mn >= lo && mx <= hi } &&
-            bucketOk(mn, mx) &&
-            tsNulls.get(f).contains(0L) // proven null-ts-free
-        case _ => false
-      }
-    }.toSet
-    val effectiveGroupOf: String => Seq[String] = bucketIdOf match {
-      case None => groupOf
-      case Some(idOf) => f =>
-        idOf(bounds(f)._1.get).toString +: groupOf(f)
-    }
-    val (groups, residualContained) = statsAggPartsGrouped(spark, table,
-      columns, schema, rangeColumns, sumColumns, effectiveGroupOf,
-      fileFilter = contained, ndvColumns = ndvColumns,
-      kllColumns = kllColumns)
-    val toScan: Seq[String] =
-      (overlapping.filterNot(contained) ++ residualContained).distinct
-    (groups, toScan, contained.size - residualContained.size)
-  }
-
-  /** Grouped twin of [[timeBandParts]]: per-group metadata partials
-    * over the contained files, keyed by `groupOf` (the rule passes the
-    * partition-directory projection). Same classification and
-    * conservativeness.
-    */
-  private[lake] def timeBandPartsGrouped(
-      spark: SparkSession, table: String,
-      fromUs: Long, toUs: Long,
-      columns: Seq[String], schema: StructType,
-      rangeColumns: Set[String], sumColumns: Set[String],
-      groupOf: String => Seq[String],
-      fileFilter: String => Boolean,
-      ndvColumns: Set[String] = Set.empty,
-      kllColumns: Set[String] = Set.empty)
-      : (Seq[(Seq[String], StatsAggParts)], Seq[String], Int) =
-    timeBandPartsGroupedMulti(spark, table, Seq((fromUs, toUs)),
-      columns, schema, rangeColumns, sumColumns, groupOf, fileFilter,
-      ndvColumns, kllColumns)
-
-  /** Multi-band form of [[timeBandPartsGrouped]] — the grouped face of
-    * the OR-of-bands dashboard shape.
-    */
-  private[lake] def timeBandPartsGroupedMulti(
-      spark: SparkSession, table: String,
-      bands: Seq[(Long, Long)],
-      columns: Seq[String], schema: StructType,
-      rangeColumns: Set[String], sumColumns: Set[String],
-      groupOf: String => Seq[String],
-      fileFilter: String => Boolean,
-      ndvColumns: Set[String] = Set.empty,
-      kllColumns: Set[String] = Set.empty)
-      : (Seq[(Seq[String], StatsAggParts)], Seq[String], Int) = {
-    val (groups, toScan, contained) = timePartsGroupedCore(spark, table,
-      bands, bucketIdOf = None, columns, schema, rangeColumns, sumColumns,
-      groupOf, fileFilter, ndvColumns, kllColumns)
-    (groups.toSeq, toScan, contained)
-  }
-
-  /** TIME-BUCKET-grouped twin of [[timeBandPartsGrouped]] (r17 verdict
-    * task 1 — the domain's reporting shape, `GROUP BY tp_date` /
-    * `date_trunc` buckets): a file is metadata-eligible iff it is
-    * band-contained, proven null-ts-free, AND bucket-contained — its
-    * manifest ts range maps to ONE bucket id under `bucketIdOf` — so
-    * every row of the file shares the file's bucket and the full-file
-    * stats ARE that bucket's partial. After time-ordered compaction
-    * (the reference orders by tp_timestamp precisely so files don't
-    * straddle, compact.go:264-416) most files are day-contained, so a
-    * daily report over a year reads kilobytes of metadata plus the
-    * handful of multi-day straddlers. Group key = (bucket index,
-    * partition-key projection); files that straddle a bucket OR every
-    * band (or lack coverage) go to the scan list, classified
-    * conservatively exactly as [[timeBandPartsGrouped]]. `bands`
-    * carries the WHERE's disjoint merged window set (one full-range
-    * band when the query has no time filter).
-    */
-  private[lake] def timeBucketPartsGrouped(
-      spark: SparkSession, table: String,
-      bands: Seq[(Long, Long)], bucketIdOf: Long => Long,
-      columns: Seq[String], schema: StructType,
-      rangeColumns: Set[String], sumColumns: Set[String],
-      partOf: String => Seq[String],
-      fileFilter: String => Boolean,
-      ndvColumns: Set[String] = Set.empty,
-      kllColumns: Set[String] = Set.empty)
-      : (Seq[((Long, Seq[String]), StatsAggParts)], Seq[String], Int) = {
-    val (groups, toScan, contained) = timePartsGroupedCore(spark, table,
-      bands, bucketIdOf = Some(bucketIdOf), columns, schema, rangeColumns,
-      sumColumns, partOf, fileFilter, ndvColumns, kllColumns)
-    val out = groups.toSeq.map { case (key, p) =>
-      ((key.head.toLong, key.tail), p)
-    }
-    (out, toScan, contained)
-  }
-
-  /** Distinct `tp_date` count per group, PROVABLE from the manifest
-    * alone (r18 verdict task 6 — "how many active days"): every live
-    * file passing `fileFilter` must either be day-contained (its
-    * manifest ts range floors to ONE epoch day — it then contributes
-    * exactly that day: the min row sits on it, and no row can sit on
-    * another) or be all-null-ts (contributing no dates — SQL DISTINCT
-    * ignores nulls). One straddler, one half-known range, or one
-    * unrecorded live file → None: the set is no longer provable and
-    * the caller declines to the scan. Metadata-sized (one snapshot
-    * probe + the listing); keys are `groupOf`'s projection, aligned
-    * with [[statsAggregateGroupedIfCovered]]. Callers gate on the
-    * reader session being UTC (the tp_date derivation convention).
-    */
-  private[graft] def distinctDayCounts(
-      spark: SparkSession, table: String,
-      groupOf: String => Seq[String],
-      fileFilter: String => Boolean): Option[Map[Seq[String], Long]] = {
-    if (!hasData(spark, table)) return Some(Map.empty)
-    val snap = metaSnapshot(spark, table)
-    val live = dataFiles(spark, table).filter(fileFilter)
-    val sets =
-      scala.collection.mutable.Map[Seq[String],
-        scala.collection.mutable.Set[Long]]()
-    live.foreach { f =>
-      val set = sets.getOrElseUpdate(groupOf(f),
-        scala.collection.mutable.Set.empty[Long])
-      snap.manifest.get(f) match {
-        case None => return None // live but unrecorded: can't prove
-        case Some(m) => (m.minUs, m.maxUs) match {
-          case (None, None) => () // all-null-ts: no dates
-          case (Some(mn), Some(mx)) =>
-            val d = Math.floorDiv(mn, 86400000000L)
-            if (d != Math.floorDiv(mx, 86400000000L)) return None
-            set += d
-          case _ => return None // half-known range: not provable
-        }
-      }
-    }
-    Some(sets.map { case (k, s) => k -> s.size.toLong }.toMap)
-  }
-
-  /** Banded twin of [[distinctDayCounts]] — "active days in
-    * [from, to]": provable iff every (filtered) ranged file is
-    * day-contained and either fully inside one band or fully outside
-    * all of them. A file PARTIALLY overlapping a band edge proves
-    * nothing — its min/max are real rows, but no row is guaranteed to
-    * land inside the band — so it declines. The count is the size of
-    * the day-id set of the inside files (each nonempty by
-    * construction: min/max are actual rows).
-    */
-  private[graft] def distinctDayCountsBanded(
-      spark: SparkSession, table: String,
-      bands: Seq[(Long, Long)],
-      fileFilter: String => Boolean): Option[Long] = {
+      bands: Seq[(Long, Long)] = Seq(Lake.FullRange)): Option[Long] = {
     if (!hasData(spark, table)) return Some(0L)
     val snap = metaSnapshot(spark, table)
-    val live = dataFiles(spark, table).filter(fileFilter)
-    val days = scala.collection.mutable.Set.empty[Long]
-    live.foreach { f =>
-      snap.manifest.get(f) match {
-        case None => return None // live but unrecorded: can't prove
-        case Some(m) => (m.minUs, m.maxUs) match {
-          case (None, None) => () // all-null-ts: the band drops nulls
-          case (Some(mn), Some(mx)) =>
-            val inside = bands.exists { case (lo, hi) =>
-              lo <= mn && mx <= hi
-            }
-            if (inside) {
-              val d = Math.floorDiv(mn, 86400000000L)
-              if (d != Math.floorDiv(mx, 86400000000L)) return None
-              days += d
-            } else {
-              val outside = bands.forall { case (lo, hi) =>
-                mx < lo || mn > hi
-              }
-              if (!outside) return None // band-edge partial overlap
-            }
-          case _ => return None // half-known range: not provable
+    val perFile = dataFiles(spark, table).map(f =>
+      snap.manifest.get(f).flatMap { m =>
+        (m.minUs, m.maxUs) match {
+          case (Some(mn), Some(mx))
+              if bands.forall { case (lo, hi) => mx < lo || mn > hi } =>
+            Some(Set.empty[Long])
+          case (Some(mn), Some(mx))
+              if !bands.exists { case (lo, hi) => lo <= mn && mx <= hi } =>
+            None // band-edge partial overlap
+          case _ => Lake.daysOf(m)
         }
-      }
-    }
-    Some(days.size.toLong)
+      })
+    if (perFile.contains(None)) None
+    else Some(perFile.flatten.flatten.toSet.size.toLong)
   }
 
-  /** Ungrouped core: one partial over all covered files. */
-  private def statsAggParts(
-      spark: SparkSession, table: String,
-      columns: Seq[String], schema: StructType,
-      rangeColumns: Set[String],
-      sumColumns: Set[String]): StatsAggParts = {
-    val (groups, residual) = statsAggPartsGrouped(spark, table, columns,
-      schema, rangeColumns, sumColumns, _ => Nil)
-    groups.values.headOption
-      .map(_.copy(residual = residual))
-      .getOrElse(StatsAggParts(0L, Map.empty, Map.empty, Map.empty,
-        Map.empty, residual))
-  }
-
-  /** Metadata-only GROUPED answer over partition columns — per-group
-    * count/min/max from the manifest+sidecar, the grouped twin of
-    * [[statsAggregateIfCovered]]. Group keys are the files' DIRECTORY
-    * values (exactly the values the scan would surface: partitionBy
-    * strips the columns from the files, so directory truth IS column
-    * truth). None when any live file is uncovered, any group column
-    * isn't a physical partition column, or the table has no data.
-    * Keys are the raw (Hive-unescaped) directory strings in
-    * `groupCols` order; `__HIVE_DEFAULT_PARTITION__` means null.
-    */
-  private[lake] def statsAggregateGroupedIfCovered(
-      spark: SparkSession, table: String,
-      groupCols: Seq[String], columns: Seq[String],
-      rangeColumns: Set[String],
-      sumColumns: Set[String] = Set.empty,
-      ndvColumns: Set[String] = Set.empty,
-      fileFilter: String => Boolean = _ => true,
-      kllColumns: Set[String] = Set.empty,
-      mgColumns: Set[String] = Set.empty,
-      countedColumns: String => Boolean = _ => true)
-      : Option[Seq[(Seq[String], StatsAggParts)]] = {
-    if (groupCols.isEmpty ||
-      !groupCols.forall(TpSchema.partitionCols.contains)) return None
-    if (!hasData(spark, table)) return None
-    val schema = schemaOf(spark, table)
-    if (!columns.forall(schema.fieldNames.contains)) return None
-    val (groups, residual) = statsAggPartsGrouped(spark, table, columns,
-      schema, rangeColumns, sumColumns,
-      f => {
-        val pv = partitionValues(relOf(table, f))
-        groupCols.map(pv.getOrElse(_, null))
-      },
-      fileFilter, ndvColumns, kllColumns, mgColumns, countedColumns)
-    if (residual.nonEmpty) None else Some(groups.toSeq)
-  }
-
-  /** Core: per-group metadata partials + the global residual list.
-    * Driver-side metadata reads only (the manifest and the sidecar, via
-    * the cached snapshot); never touches data files. `groupOf` maps a
-    * file path to its group key (Nil = one global group).
-    */
-  /** @param fileFilter restricts the aggregate to files whose
-    *   partition directory passes a per-file-constant predicate (the
-    *   rule's partition-only WHERE support) — failing files leave BOTH
-    *   the totals and the residual set, exactly as partition pruning
-    *   would exclude them from a scan.
-    * @param countedColumns the columns whose `count` the caller reads.
-    *   A `tp_timestamp`/`tp_date` column that is only ranged (min/max,
-    *   nothing counted, summed or sketched) is answered from the
-    *   manifest ts range alone — no sidecar row needed, so the
-    *   whole-table `count(*), min(ts), max(ts)` serves on every table.
+  /** Per-group metadata partials over `files` + the files the metadata
+    * cannot answer for `needs` (the caller scans or declines them).
+    * Driver-side reads of the snapshot only; never touches data files.
+    * `groupOf` maps a file path to its group key (Nil = one group).
+    * Group keys for partition columns are the files' DIRECTORY values
+    * (partitionBy strips the columns from the files, so directory truth
+    * IS column truth): the raw (Hive-unescaped) strings, with
+    * `__HIVE_DEFAULT_PARTITION__` meaning null.
+    *
+    * A `tp_timestamp`/`tp_date` column only ranged (min/max — nothing
+    * counted, summed or sketched) is answered from the manifest ts range
+    * alone, so the whole-table `count(*), min(ts), max(ts)` serves on
+    * every table with no sidecar row.
     */
   private def statsAggPartsGrouped(
-      spark: SparkSession, table: String,
-      columns: Seq[String], schema: StructType,
-      rangeColumns: Set[String],
-      sumColumns: Set[String],
-      groupOf: String => Seq[String],
-      fileFilter: String => Boolean = _ => true,
-      ndvColumns: Set[String] = Set.empty,
-      kllColumns: Set[String] = Set.empty,
-      mgColumns: Set[String] = Set.empty,
-      countedColumns: String => Boolean = _ => true)
+      spark: SparkSession, table: String, snap: Lake.MetaSnapshot,
+      files: Seq[String], needs: ColumnNeeds, schema: StructType,
+      groupOf: String => Seq[String])
       : (Map[Seq[String], StatsAggParts], Seq[String]) = {
+    val columns = needs.columns
+    val ColumnNeeds(countedColumns, rangeColumns, sumColumns, ndvColumns,
+      kllColumns, mgColumns) = needs
     def dtOf(c: String): DataType = schema(c).dataType
     val utc = TpSchema.isUtcZone(
       spark.sessionState.conf.sessionLocalTimeZone)
@@ -2050,7 +1744,7 @@ final case class Lake(root: String, manifestCompactThreshold: Int = 64)
         val us = org.apache.spark.sql.catalyst.util.DateTimeUtils
           .fromJavaTimestamp(t)
         java.sql.Date.valueOf(java.time.LocalDate.ofEpochDay(
-          Math.floorDiv(us, 86400000000L)))
+          Math.floorDiv(us, TpSchema.DayUs)))
       }.orNull
     def minMaxFromZones(dt: DataType): Boolean = dt match {
       case ByteType | ShortType | IntegerType | LongType |
@@ -2058,18 +1752,12 @@ final case class Lake(root: String, manifestCompactThreshold: Int = 64)
       case _ => false
     }
 
-    // live truth = the LISTING; manifest/sidecar newest-seq rows come
-    // from the per-mutation MetaSnapshot (r16 verdict task 3: ten
-    // consecutive metadata-served queries paid the manifest read ten
-    // times — now one token probe each). A live file with no manifest
-    // row is scan-residual — the manifest must not be trusted for
-    // counts it never recorded; a manifest row for a file the listing
-    // no longer holds is ignored (the old reconcile, as a filter).
-    val snap = metaSnapshot(spark, table)
-    val live = dataFiles(spark, table).filter(fileFilter)
-    val liveSet = live.toSet
+    // A file with no manifest row is uncovered — the manifest must not
+    // be trusted for counts it never recorded; a manifest row for a
+    // file the listing no longer holds is ignored.
+    val fileSet = files.toSet
     val manifest: Map[String, Lake.ManifestStat] =
-      snap.manifest.filter { case (f, _) => liveSet(f) }
+      snap.manifest.filter { case (f, _) => fileSet(f) }
     val sidecar = snap.sidecar
 
     def usable(file: String, rows: Long, c: String): Boolean = {
@@ -2121,7 +1809,7 @@ final case class Lake(root: String, manifestCompactThreshold: Int = 64)
       // tp_date min/max = day-truncated manifest ts extremes (dates
       // are monotone in ts); exact only under the engine's UTC-writer
       // convention, so gated on the reader session being UTC like the
-      // splitBand date fold
+      // splitBands date fold
       if (c == TpSchema.Date && utc) return true
       val dt = dtOf(c)
       minMaxFromZones(dt) && (dt match {
@@ -2133,7 +1821,7 @@ final case class Lake(root: String, manifestCompactThreshold: Int = 64)
       })
     }
 
-    val residual: Seq[String] = live.filter { f =>
+    val residual: Seq[String] = files.filter { f =>
       manifest.get(f) match {
         case None => true // live but unrecorded: scan it
         case Some(m) => !columns.forall(c => usable(f, m.rows, c))
@@ -2233,13 +1921,13 @@ final case class Lake(root: String, manifestCompactThreshold: Int = 64)
         // estimate) so band hybrids can union it with the straddler
         // scan's sketch in-plan.
         val ndvBlobs: Map[String, Array[Byte]] =
-          ndvColumns.intersect(columns.toSet).map { c =>
+          ndvColumns.map { c =>
             c -> graft.functions.NdvFns.unionBlob(
               files.flatMap { case (file, _) => sidecar((file, c)).sketch })
           }.toMap
         // quantiles: the same move over the KLL distribution sketches
         val kllBlobs: Map[String, Array[Byte]] =
-          kllColumns.intersect(columns.toSet).map { c =>
+          kllColumns.map { c =>
             c -> graft.functions.QuantileFns.mergeBlobs(
               files.flatMap { case (file, _) => sidecar((file, c)).kll })
           }.toMap
@@ -2247,14 +1935,20 @@ final case class Lake(root: String, manifestCompactThreshold: Int = 64)
         // CALLER checks the merged sketch's error bound (exact-only
         // serve gate) — usable() guaranteed every file carries a blob
         val mgBlobs: Map[String, Array[Byte]] =
-          mgColumns.intersect(columns.toSet).map { c =>
+          mgColumns.map { c =>
             c -> graft.functions.TopKFns.toBlob(
               graft.functions.TopKFns.mergeBlobs(
                 files.flatMap { case (file, _) =>
                   sidecar((file, c)).mg }))
           }.toMap
+        // the epoch days the group's rows lie on (count(DISTINCT
+        // tp_date)); None once a file's range proves no single day
+        val dayIds = files.foldLeft(Option(Set.empty[Long])) {
+          case (acc, (_, m)) =>
+            for (a <- acc; d <- Lake.daysOf(m)) yield a ++ d
+        }
         key -> StatsAggParts(nRows, cnt.toMap, mn.toMap, mx.toMap,
-          sm.toMap, Nil, ndvBlobs, kllBlobs, mgBlobs)
+          sm.toMap, ndvBlobs, kllBlobs, mgBlobs, dayIds)
       }
     (groups, residual)
   }
@@ -2553,33 +2247,91 @@ object Lake {
     }
   private val writeConfLock = new Object
 
-  /** The metadata-served portion of a stats aggregate: totals over the
-    * files the manifest+sidecar answer EXACTLY, plus the residual file
-    * list they cannot. Shared core of `statsAggregateAudited` (which
-    * scans the residual and combines) and `statsAggregateIfCovered`
-    * (the optimizer-rule feed, which declines instead of scanning).
+  /** What one metadata aggregate reads per column: `counted` columns
+    * need sidecar null counts, `ranged` min/max, `summed` exact value
+    * sums, and `ndv`/`kll`/`topk` the per-file sketch blobs. Callers
+    * build it once from their aggregate list.
     */
-  /** `sums` carries EXACT integral-column totals (BigInt — integer
-    * addition is order-independent, so per-file sums merge exactly;
-    * the consumer converts to the SQL result type and declines on
-    * overflow); a column with zero non-null rows is absent (SQL sum
-    * of nothing is null).
+  private[graft] final case class ColumnNeeds(
+      counted: Set[String] = Set.empty,
+      ranged: Set[String] = Set.empty,
+      summed: Set[String] = Set.empty,
+      ndv: Set[String] = Set.empty,
+      kll: Set[String] = Set.empty,
+      topk: Set[String] = Set.empty) {
+    val columns: Seq[String] =
+      (counted ++ ranged ++ summed ++ ndv ++ kll ++ topk).toSeq
+  }
+
+  /** The time classification of [[Lake.metaAggregate]]: disjoint sorted
+    * closed micros `bands`, and the bucket id function (monotone in
+    * micros) when the aggregate groups by a time bucket.
     */
-  private[lake] final case class StatsAggParts(
+  private[graft] final case class TimeSplit(
+      bands: Seq[(Long, Long)],
+      bucketIdOf: Option[Long => Long] = None)
+
+  /** The whole micros range: "no band". */
+  private[graft] val FullRange: (Long, Long) = (Long.MinValue, Long.MaxValue)
+
+  /** [[Lake.metaAggregate]]'s answer: metadata partials per group over
+    * the `contained` files, and the `straddlers` it could not answer.
+    */
+  private[graft] final case class MetaAggProbe(
+      groups: Seq[(Seq[String], StatsAggParts)],
+      straddlers: Seq[String],
+      contained: Int) {
+    /** The ungrouped answer, when no file needs a scan. */
+    def covered: Option[StatsAggParts] =
+      if (straddlers.nonEmpty) None
+      else Some(groups.headOption.fold(StatsAggParts.empty)(_._2))
+  }
+
+  /** Totals over the files the manifest+sidecar answer EXACTLY. `sums`
+    * carries exact integral-column totals (BigInt — integer addition is
+    * order-independent, so per-file sums merge exactly; the consumer
+    * converts to the SQL result type and declines on overflow); a
+    * column with zero non-null rows is absent (SQL sum of nothing is
+    * null). Sketch columns keep their merged BLOBS, so hybrids can
+    * union them with a straddler scan's sketch in-plan. `dayIds` are
+    * the epoch days the rows lie on, None when a file's ts range
+    * proves no single day.
+    */
+  private[graft] final case class StatsAggParts(
       nRows: Long,
       counts: Map[String, Long],
       mins: Map[String, Any],
       maxs: Map[String, Any],
       sums: Map[String, BigInt],
-      residual: Seq[String],
       ndvBlobs: Map[String, Array[Byte]] = Map.empty,
       kllBlobs: Map[String, Array[Byte]] = Map.empty,
-      mgBlobs: Map[String, Array[Byte]] = Map.empty) {
+      mgBlobs: Map[String, Array[Byte]] = Map.empty,
+      dayIds: Option[Set[Long]] = Some(Set.empty)) {
     /** Estimates from the per-column union blobs (ndv columns only). */
     def ndvs: Map[String, Long] = ndvBlobs.map { case (c, b) =>
       c -> graft.functions.NdvFns.blobEstimate(b)
     }
   }
+
+  private[graft] object StatsAggParts {
+    /** The partial over no files: count 0, every other value null. */
+    val empty: StatsAggParts =
+      StatsAggParts(0L, Map.empty, Map.empty, Map.empty, Map.empty)
+  }
+
+  /** Epoch days a file's rows lie on, from its manifest ts range: none
+    * for an all-null-ts file, one for a day-contained file; None when
+    * the range spans days or is half-known.
+    */
+  private[lake] def daysOf(m: ManifestStat): Option[Set[Long]] =
+    (m.minUs, m.maxUs) match {
+      case (None, None) => Some(Set.empty)
+      case (Some(mn), Some(mx))
+          if Math.floorDiv(mn, TpSchema.DayUs) ==
+            Math.floorDiv(mx, TpSchema.DayUs) =>
+        Some(Set(Math.floorDiv(mn, TpSchema.DayUs)))
+      case _ => None
+    }
 
   /** Newest-seq manifest row for one live file. */
   private[lake] final case class ManifestStat(
@@ -2593,8 +2345,8 @@ object Lake {
 
   /** One table's metadata, collected once per mutation: the newest-seq
     * manifest rows (tombstones dropped) and newest-seq sidecar rows for
-    * every stats column — the shared feed for the optimize-time probes
-    * ([[Lake.statsAggregateIfCovered]], `timeBandParts*`) and the
+    * every stats column — the shared feed for the optimize-time probe
+    * ([[Lake.metaAggregate]]) and the
     * [[ZoneMapFileIndex]] loaders. Cached per `(root, table)` keyed by
     * [[Lake.dirToken]] over the manifest + sidecar directories: every
     * mutation path appends or swaps files there, so a token mismatch
@@ -2630,7 +2382,7 @@ object Lake {
         val loUs = m.minUs
         val hiUs = m.maxUs
         def day(us: Long): Double =
-          Math.floorDiv(us, 86400000000L).toDouble
+          Math.floorDiv(us, TpSchema.DayUs).toDouble
         val n = Some(m.rows)
         file -> Map(
           TpSchema.Timestamp -> ColumnZone(

@@ -195,7 +195,7 @@ object Maintenance {
     */
   def compactAligned(
       spark: SparkSession, lake: Lake, table: String,
-      grainUs: Long = 86400000000L,
+      grainUs: Long = TpSchema.DayUs,
       anchorUs: Long = 0L): (Long, Long) = lake.locked(table) {
     require(grainUs > 0, "compactAligned: grain must be positive")
     replayPendingRemovals(spark, lake, table)

@@ -7,99 +7,78 @@ import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.expressions.aggregate._
 import org.apache.spark.sql.catalyst.plans.logical._
 import org.apache.spark.sql.catalyst.rules.Rule
-import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation,
+  InMemoryFileIndex, LogicalRelation}
 import org.apache.spark.sql.types.{IntegerType, LongType, StringType}
 
-/** Answer aggregate SQL from lake metadata — the query-path face of
-  * [[Lake.statsAggregate]], so a user typing `SELECT count(*),
-  * max(value) FROM t` against a registered view gets the
-  * manifest+sidecar answer with ZERO data-file reads. Spark's own
+import graft.lake.TpSchema.DayUs
+
+/** Answer aggregate SQL from lake metadata, so `SELECT count(*),
+  * max(value) FROM t` against a registered view reads the manifest and
+  * the `_graft_colstats` sidecar instead of the data files. Spark's own
   * `OptimizeMetadataOnlyQuery` serves only partition-column aggregates
-  * from listings; Delta rewrites count/min/max from its transaction
-  * log the same way this rule does from the `_graft_colstats` sidecar.
-  * At 100 TB the difference is a full-corpus scan vs a metadata read.
+  * from listings; Delta rewrites count/min/max from its transaction log
+  * the way this rule does from the sidecar.
   *
-  * Served aggregate family (each declining to the normal scan when
-  * its metadata precondition fails):
+  * Served aggregates (each declining to the normal scan when its
+  * metadata precondition fails):
   *
-  *  - `count(*)` / `count(c)` — manifest row counts + sidecar nulls
-  *  - `min(c)` / `max(c)` — sidecar zones (integral under 2^53,
+  *  - `count(*)` / `count(c)`: manifest row counts + sidecar nulls
+  *  - `min(c)` / `max(c)`: sidecar zones (integral under 2^53,
   *    float/double in total order, strings in UTF8-byte order);
-  *    `tp_timestamp` and `tp_date` ride the manifest ts range on
-  *    EVERY table (dates are monotone in ts, UTC convention)
-  *  - `sum(c)` over integral columns — per-file DECIMAL sums merge in
+  *    `tp_timestamp` and `tp_date` ride the manifest ts range on every
+  *    table (dates are monotone in ts, UTC convention)
+  *  - `sum(c)` over integral columns: per-file DECIMAL sums merge in
   *    BigInt, exact; declines past Long.MaxValue
-  *  - `avg(c)` over integral columns — exact sum / count with one
-  *    double division; declines past 2^53 and for float/double
-  *  - `ndv(c)` ([[graft.functions.NdvFns]]) — per-file HLL sketch
-  *    UNION for int/long/string columns
-  *  - `graft_quantile(c, p)` ([[graft.functions.QuantileFns]]) —
-  *    per-file KLL sketch MERGE for numeric columns
+  *  - `avg(c)` over integral columns: exact sum / count with one double
+  *    division; declines past 2^53 and for float/double
+  *  - `ndv(c)` ([[graft.functions.NdvFns]]): per-file HLL sketch union
+  *  - `graft_quantile(c, p)` ([[graft.functions.QuantileFns]]): per-file
+  *    KLL sketch merge
+  *  - `graft_topk(c, k)` ([[graft.functions.TopKFns]]): per-file
+  *    frequent-items merge, only while the merge stays exact
+  *  - `count(DISTINCT tp_date)`: the manifest's per-file day when every
+  *    file is day-contained
   *
-  * Shapes: ungrouped, GROUP BY physical partition columns (per-group
-  * answers keyed by file directories), partition-only WHERE clauses
-  * (Catalyst-evaluated per directory), and tp_timestamp/tp_date BAND
-  * hybrids (contained files from metadata, straddlers scanned in-plan
-  * and merged — avg via exact sum+count slots, ndv/quantile via
-  * sketch-byte slots).
+  * One algorithm serves every shape, in three steps:
   *
-  * Fires ONLY when every piece is provably exact or estimator-defined:
+  *  1. '''Match''' ([[matchShape]], metadata-free). The aggregate reaches
+  *     a whole-table [[ZoneMapFileIndex]] relation through wrappers,
+  *     Filters and column-pruning projections ([[unwrap]]). Its keys
+  *     are physical partition columns plus optional time-bucket keys
+  *     (`tp_date`, `date_trunc`, `cast(ts AS date)`, the extract family)
+  *     that refine to one finest grain. The WHERE splits into a
+  *     `tp_timestamp` band set (none = the full range) and a
+  *     partition-only rest, evaluated per file directory. Each output
+  *     is classified into a [[MetadataAggregateRule.Spec]]. A shape
+  *     with a band or a bucket key is ''timed''.
+  *  2. '''Probe''' (one [[Lake.metaAggregate]] call, driver-side
+  *     metadata reads only). Untimed, every file must be answerable
+  *     from metadata or the rule declines. Timed, files the manifest
+  *     proves inside one band (and one bucket) and null-ts-free are
+  *     contained and give per-key metadata partials; the others
+  *     overlapping the bands straddle. A timed shape needs at least one
+  *     contained file.
+  *  3. '''Emit'''. With no straddlers (and distinct key tuples), a
+  *     [[LocalRelation]] of the final rows, with the original attribute
+  *     ids, types and nullability. Otherwise `Union(local partial rows,
+  *     partial Aggregate over the straddlers only)` under one merge
+  *     Aggregate keyed like the original: counts and sums add, ranges
+  *     re-extremize, avg divides an exact decimal sum by a count, and
+  *     sketches union. The straddler scan runs distributed in the plan,
+  *     never at optimize time.
   *
-  *  - the plan is an [[Aggregate]] whose child reaches a
-  *    [[ZoneMapFileIndex]]-backed lake relation through at most
-  *    column-pruning projections — any join or expression in between
-  *    keeps the plan untouched
-  *  - the relation covers the WHOLE table ([[ZoneMapFileIndex.owner]]
-  *    is set only for full-table reads, never pre-pruned subsets)
-  *  - [[Lake.statsAggregateIfCovered]] confirms EVERY live file is
-  *    metadata-answerable (sidecar rows present and trusted, no
-  *    unrecorded files, long bounds under 2^53, supported types) —
-  *    otherwise the rule DECLINES rather than scan at optimize time,
-  *    and the query runs its normal plan
-  *
-  * The metadata probe itself is metadata-sized (driver-side manifest
-  * and sidecar reads, no Spark job) and runs only after the full
-  * structural match, so non-candidate queries pay a pattern match and nothing
-  * else. The rewrite replaces the aggregate with a one-row
-  * [[LocalRelation]] carrying the same attribute ids, types and
-  * nullability, so downstream operators and reuse are unaffected.
-  * The qi33 oracle gates exactness (DuckDB recomputes from raw rows)
-  * and pins files-read == 0 through the SQL path.
+  * Rewrites are optional: any failure falls open to the original plan.
+  * The qi33–qi55 oracles gate exactness against DuckDB and pin
+  * files-read through the SQL path.
   */
 final case class MetadataAggregateRule(session: SparkSession)
   extends Rule[LogicalPlan] {
 
   import MetadataAggregateRule._
 
-  private val DayUs = 86400000000L
-
   override def apply(plan: LogicalPlan): LogicalPlan = plan.transformDown {
-    case agg: Aggregate if agg.groupingExpressions.isEmpty =>
-      safely(agg)(rewrite(agg))
-    case agg: Aggregate
-        if agg.groupingExpressions.forall(g =>
-          g.isInstanceOf[AttributeReference] &&
-            graft.lake.TpSchema.partitionCols.contains(
-              g.asInstanceOf[AttributeReference].name)) =>
-      // GROUP BY physical partition columns: per-group counts/ranges
-      // come from the manifest+sidecar keyed by each file's directory
-      safely(agg)(rewriteGrouped(agg))
-    case agg: Aggregate
-        if agg.groupingExpressions.nonEmpty &&
-          agg.groupingExpressions.forall(g =>
-            g.isInstanceOf[AttributeReference] ||
-              bucketValue(g).isDefined) =>
-      // GROUP BY a time bucket (`tp_date`, `date_trunc('day'/'hour'/
-      // 'minute', tp_timestamp)`), optionally with partition columns:
-      // THE reporting shape of the reference's domain — day-contained
-      // files contribute per-bucket metadata partials, straddlers
-      // scan and group in-plan, the final GROUP BY merges. The guard
-      // is structural only (the optimizer's PullOutGroupingExpressions
-      // hides `date_trunc` behind a `_groupingexpression` attribute
-      // computed in a Project below, so real classification needs the
-      // child); the rewrite resolves attrs through those aliases and
-      // declines cheaply when no bucket key emerges.
-      safely(agg)(rewriteBucketGrouped(agg))
+    case agg: Aggregate => safely(agg)(matchShape(agg).flatMap(rewrite))
   }
 
   /** Bucket grain of a time-bucket grouping expression, or None when
@@ -121,7 +100,7 @@ final case class MetadataAggregateRule(session: SparkSession)
     *  - `cast(tp_timestamp AS date)` — the third spelling of day
     *
     * All are gated on the reader session being UTC (same reasoning as
-    * the splitBand date fold): a non-UTC session truncates in local
+    * the splitBands date fold): a non-UTC session truncates in local
     * time and signals a deployment where the UTC-writer convention may
     * not hold. Exactly-UTC spellings (`Etc/UTC`, `Z`, `+00:00`) are
     * accepted via [[TpSchema.isUtcZone]] normalization. The zone
@@ -162,24 +141,40 @@ final case class MetadataAggregateRule(session: SparkSession)
         orig
     }
 
-  /** Descend through alias/view wrappers, PURE column-pruning
-    * projections, and Filter nodes (their AND-folded condition is
-    * returned for the partition-only check) to the relation; anything
-    * else disqualifies.
+  /** Descend to the lake relation through alias/view wrappers, Filters
+    * (their AND-folded condition is returned) and Projects whose entries
+    * are attributes or aliases of time-bucket expressions — the
+    * optimizer's PullOutGroupingExpressions materializes a
+    * `date_trunc(...)` grouping as a `_groupingexpression` column in
+    * exactly such a Project. Any other computed alias disqualifies, as
+    * does a bucket alias whose NAME shadows a column of its child (a
+    * name-keyed stats lookup would otherwise serve the wrong column's
+    * stats). Returns the alias bindings, so grouping attributes resolve
+    * back to their bucket expressions.
     */
-  private def unwrap(p: LogicalPlan)
-      : Option[(LogicalRelation, Option[Expression])] = p match {
-    case s: SubqueryAlias => unwrap(s.child)
-    case v: View => unwrap(v.child)
-    case f: Filter => unwrap(f.child).map { case (lr, c) =>
-      (lr, Some(c.map(And(f.condition, _)).getOrElse(f.condition)))
+  private def unwrap(p: LogicalPlan): Option[
+      (LogicalRelation, Option[Expression], Map[ExprId, Expression])] =
+    p match {
+      case s: SubqueryAlias => unwrap(s.child)
+      case v: View => unwrap(v.child)
+      case f: Filter => unwrap(f.child).map { case (lr, c, m) =>
+        (lr, Some(c.map(And(f.condition, _)).getOrElse(f.condition)), m)
+      }
+      case pr: Project
+          if pr.projectList.forall {
+            case _: AttributeReference => true
+            case al: Alias => bucketValue(al.child).isDefined &&
+              !pr.child.output.exists(_.name == al.name)
+            case _ => false
+          } =>
+        unwrap(pr.child).map { case (lr, c, m) =>
+          (lr, c, m ++ pr.projectList.collect {
+            case al: Alias => al.exprId -> al.child
+          })
+        }
+      case lr: LogicalRelation => Some((lr, None, Map.empty))
+      case _ => None
     }
-    case pr: Project
-        if pr.projectList.forall(_.isInstanceOf[AttributeReference]) =>
-      unwrap(pr.child)
-    case lr: LogicalRelation => Some((lr, None))
-    case _ => None
-  }
 
   /** A WHERE clause is metadata-compatible iff it is deterministic and
     * references ONLY physical partition columns of convertible types —
@@ -203,11 +198,8 @@ final case class MetadataAggregateRule(session: SparkSession)
       case _ => return None
     }
     if (!attrs.forall(a =>
-      graft.lake.TpSchema.partitionCols.contains(a.name))) return None
-    if (!attrs.forall(_.dataType match {
-      case IntegerType | LongType | StringType => true
-      case _ => false
-    })) return None
+      TpSchema.partitionCols.contains(a.name))) return None
+    if (!attrs.forall(a => dirTyped(a.dataType))) return None
     val bound = BindReferences.bindReference(cond,
       org.apache.spark.sql.catalyst.expressions.AttributeSeq(attrs))
     Some { file =>
@@ -230,101 +222,26 @@ final case class MetadataAggregateRule(session: SparkSession)
       case _ => org.apache.spark.unsafe.types.UTF8String.fromString(s)
     }
 
-  /** Explain-lint probe: Some(aggregated column names) when the
-    * OPTIMIZED plan still contains an Aggregate this rule was
-    * structurally able to serve — i.e. the rewrite was possible but
-    * DECLINED (missing sidecar coverage, unrecorded files, a bound
-    * past 2^53) — so `.explain` can tell the user what to enable.
-    * None when nothing was missed (not a candidate, or the rewrite
-    * fired and no Aggregate remains).
+  /** Explain-lint probe: Some(column names) when the OPTIMIZED plan
+    * still contains an Aggregate whose shape [[matchShape]] accepts —
+    * the rewrite was possible but DECLINED (missing sidecar coverage,
+    * unrecorded files, a bound past 2^53) — so `.explain` can tell the
+    * user which stats to enable. Timed shapes and distinct-day counts
+    * prove containment from `tp_timestamp` stats, so they name that
+    * column. None when nothing was missed (not a candidate, or the
+    * rewrite fired and no such Aggregate remains).
     */
   private[graft] def missedCandidate(
       plan: LogicalPlan): Option[Seq[String]] =
     plan.collectFirst(Function.unlift {
-      case agg: Aggregate => structuralCandidate(agg)
+      case agg: Aggregate => matchShape(agg).map { m =>
+        (m.specs.collect {
+          case c: ColSpec => c.a.name
+          case DistinctDates(_) => TpSchema.Timestamp
+        } ++ (if (m.timed) Seq(TpSchema.Timestamp) else Nil)).distinct
+      }
       case _ => None
     })
-
-  private def structuralCandidate(agg: Aggregate): Option[Seq[String]] = {
-    // time-bucket groupings (tp_date / date_trunc / cast-to-date,
-    // possibly pulled out as a _groupingexpression alias) lint too:
-    // their containment proof rides tp_timestamp stats, so the hint
-    // names that column
-    val bucketShaped: Boolean = {
-      val aliasMap =
-        unwrapBucket(agg.child).map(_._3).getOrElse(Map.empty)
-      val resolved = agg.groupingExpressions.map {
-        case a: AttributeReference => aliasMap.getOrElse(a.exprId, a)
-        case e => e
-      }
-      val grains = resolved.flatMap(bucketValue(_)).map(_._1)
-      grains.nonEmpty &&
-        // only lint shapes a containment grain could actually serve
-        grains.exists(a =>
-          grains.forall(b => MetadataAggregateRule.refines(a, b))) &&
-        resolved.forall(g => bucketValue(g).isDefined ||
-          (g.isInstanceOf[AttributeReference] &&
-            graft.lake.TpSchema.partitionCols.contains(
-              g.asInstanceOf[AttributeReference].name)))
-    }
-    if (!bucketShaped && !agg.groupingExpressions.forall(g =>
-      g.isInstanceOf[AttributeReference] &&
-        graft.lake.TpSchema.partitionCols.contains(
-          g.asInstanceOf[AttributeReference].name))) return None
-    val (lr, cond) = unwrap(agg.child)
-      .orElse(unwrapBucket(agg.child).map(t => (t._1, t._2)))
-      .getOrElse(return None)
-    val (lake, table) = (lr.relation match {
-      case fs: HadoopFsRelation => fs.location match {
-        case z: ZoneMapFileIndex => z.owner
-        case _ => None
-      }
-      case _ => None
-    }).getOrElse(return None)
-    // a filter must itself be metadata-compatible, or "could be
-    // served" would be a false promise: partition-only, or a
-    // tp_timestamp band (whose hybrid needs tp_timestamp stats — the
-    // lint then names that column in the enablement command)
-    val bandShaped = cond match {
-      case None => false
-      case Some(c) =>
-        if (partitionFilePredicate(lake, table, c).isDefined) false
-        else splitBand(c) match {
-          case Some((lo, hi, n, rest)) if n > 0 && lo <= hi &&
-              rest.forall(rc =>
-                partitionFilePredicate(lake, table, rc).isDefined) =>
-            true
-          case _ => return None
-        }
-    }
-    val groupRefs = AttributeSet(agg.groupingExpressions
-      .flatMap(_.references))
-    val specs = agg.aggregateExpressions.map {
-      // bare attrs are grouping-column pass-throughs in the grouped
-      // shape; the lint needn't re-validate their exprIds. Aliases
-      // over group keys (incl. derived casts in the bucket shape) are
-      // pass-throughs too.
-      case _: AttributeReference => Some(CountStar)
-      case al: Alias if al.references.nonEmpty &&
-          al.references.subsetOf(groupRefs) => Some(CountStar)
-      case e => classify(e)
-    }
-    if (specs.exists(_.isEmpty)) None
-    else Some((specs.flatten.collect {
-      case CountCol(a) => a.name
-      case MinCol(a) => a.name
-      case MaxCol(a) => a.name
-      case SumCol(a) => a.name
-      case AvgCol(a) => a.name
-      case NdvCol(a) => a.name
-      case QuantileCol(a, _) => a.name
-      case TopKCol(a, _) => a.name
-      // distinct-day proof rides the manifest's tp_timestamp ranges
-      case DistinctDates(_) => graft.lake.TpSchema.Timestamp
-    } ++ (if (bandShaped || bucketShaped)
-            Seq(graft.lake.TpSchema.Timestamp)
-          else Nil)).distinct)
-  }
 
   private def classify(e: NamedExpression): Option[Spec] = e match {
     case Alias(ae: AggregateExpression, _) => classifyAgg(ae)
@@ -339,13 +256,13 @@ final case class MetadataAggregateRule(session: SparkSession)
     // date set IS the manifest's per-file day set (a day-contained
     // file with a manifest range has at least its min row on that
     // day; null dates don't count in SQL DISTINCT). Proven or
-    // declined per file in Lake.distinctDayCounts; any straddler
-    // declines. UTC-gated like every tp_date derivation.
+    // declined per group from the probe's per-file days; any
+    // straddler declines. UTC-gated like every tp_date derivation.
     else if (ae.isDistinct) ae.aggregateFunction match {
       case Count(Seq(a: AttributeReference))
-          if a.name == graft.lake.TpSchema.Date &&
+          if a.name == TpSchema.Date &&
             a.dataType == org.apache.spark.sql.types.DateType &&
-            graft.lake.TpSchema.isUtcZone(
+            TpSchema.isUtcZone(
               session.sessionState.conf.sessionLocalTimeZone) =>
         Some(DistinctDates(a))
       case _ => None
@@ -417,8 +334,12 @@ final case class MetadataAggregateRule(session: SparkSession)
       case _ => None
     }
 
-  private def rewrite(agg: Aggregate): Option[LogicalPlan] = {
-    val (lr, cond) = unwrap(agg.child).getOrElse(return None)
+  /** Step 1, match: the servable shape of `agg`, or None. Metadata-free
+    * (a pattern match plus expression analysis), so a non-candidate
+    * query pays nothing else, and the explain lint shares it.
+    */
+  private def matchShape(agg: Aggregate): Option[Shape] = {
+    val (lr, cond, aliases) = unwrap(agg.child).getOrElse(return None)
     val (lake, table) = (lr.relation match {
       case fs: HadoopFsRelation => fs.location match {
         case z: ZoneMapFileIndex => z.owner
@@ -426,163 +347,309 @@ final case class MetadataAggregateRule(session: SparkSession)
       }
       case _ => None
     }).getOrElse(return None)
-    val fileFilter: String => Boolean = cond match {
+    val grouping = agg.groupingExpressions
+    // each key is a time bucket (resolved through the pulled-out
+    // grouping aliases) or a physical partition column, whose directory
+    // value is the column's value for every row of a file
+    val keys: Seq[Key] = grouping.map { g =>
+      val resolved = g match {
+        case a: AttributeReference => aliases.getOrElse(a.exprId, a)
+        case e => e
+      }
+      bucketValue(resolved) match {
+        case Some((gr, valueOf)) => BucketKey(gr, valueOf)
+        case None => g match {
+          case a: AttributeReference
+              if TpSchema.partitionCols.contains(a.name) &&
+                dirTyped(a.dataType) => PartKey(a)
+          case _ => return None
+        }
+      }
+    }
+    // containment proves on the FINEST grain present, one whose buckets
+    // refine every other bucket key's (week × month has none)
+    val grains = keys.collect { case BucketKey(gr, _) => gr }
+    val grain =
+      if (grains.isEmpty) None
+      else Some(grains.find(a => grains.forall(refines(a, _)))
+        .getOrElse(return None))
+    // WHERE: partition-only, or a tp band set beside a partition-only
+    // rest; no band = the full range
+    val (bands, partCond) = cond match {
+      case Some(c) if partitionFilePredicate(lake, table, c).isEmpty =>
+        splitBands(c) match {
+          case Some((bs, n, rest)) if n > 0 => (Some(bs), rest)
+          // only band-neutral conjuncts (isnotnull(tp_timestamp)) beside
+          // the rest: sound when bucket containment proves every
+          // metadata-served file null-ts-free
+          case Some((_, _, rest)) if grain.isDefined => (None, rest)
+          case _ => return None
+        }
+      case c => (None, c)
+    }
+    if (bands.exists(_.isEmpty)) return None
+    val fileFilter: String => Boolean = partCond match {
       case None => _ => true
-      case Some(c) =>
-        partitionFilePredicate(lake, table, c) match {
-          case Some(p) => p
-          // not partition-only: a tp_timestamp band (plus optional
-          // partition conjuncts) gets the HYBRID rewrite — contained
-          // files from metadata, straddlers scanned in-plan
-          case None => return rewriteBand(agg, lr, lake, table, c)
-        }
+      case Some(pc) =>
+        partitionFilePredicate(lake, table, pc).getOrElse(return None)
     }
-    // a WHERE that filters rows away can leave zero surviving rows in
-    // a group of aggregates whose types we can't synthesize a correct
-    // empty result for without the parts — handled below (nRows == 0
-    // still yields the correct count-0 / null-min row)
-    val specs = agg.aggregateExpressions.map(classify)
-    if (specs.exists(_.isEmpty)) return None
-    val flat = specs.flatten
-    val cols = flat.collect {
-      case CountCol(a) => a.name
-      case MinCol(a) => a.name
-      case MaxCol(a) => a.name
-      case SumCol(a) => a.name
-      case AvgCol(a) => a.name
-      case NdvCol(a) => a.name
-      case QuantileCol(a, _) => a.name
-      case TopKCol(a, _) => a.name
-    }.distinct
-    // count-only columns need just the sidecar's null/row counts; only
-    // min/max targets must also have exact zone ranges, only sum/avg
-    // targets the per-file value sums, and only ndv/quantile targets
-    // their blobs
-    val rangeCols = flat.collect {
-      case MinCol(a) => a.name
-      case MaxCol(a) => a.name
-    }.toSet
-    val sumCols = flat.collect {
-      case SumCol(a) => a.name
-      case AvgCol(a) => a.name
-    }.toSet
-    val ndvCols = flat.collect { case NdvCol(a) => a.name }.toSet
-    val kllCols = flat.collect { case QuantileCol(a, _) => a.name }.toSet
-    val mgCols = flat.collect { case TopKCol(a, _) => a.name }.toSet
-    val parts = lake.statsAggregateIfCovered(session, table, cols,
-      rangeCols, sumCols, ndvCols, fileFilter, kllCols, mgCols,
-      countedCols(flat)).getOrElse(return None)
-    // a sum past Long.MaxValue has no exact BIGINT value — decline
-    if (!flat.collect { case SumCol(a) => a.name }.forall(c =>
-      parts.sums.get(c).forall(_.isValidLong))) return None
-    // an avg whose exact sum passes 2^53 loses double losslessness
-    if (!flat.collect { case AvgCol(a) => a.name }.forall(c =>
-      parts.sums.get(c).forall(_.abs <= MaxExactAvgSum))) return None
-    // top-k: the MERGED sketch must be provably exact (no eviction
-    // anywhere) — an approximate regime declines to the scan
-    if (!mgCols.forall(c => parts.mgBlobs.get(c).exists(b =>
-      graft.functions.TopKFns.isExact(
-        graft.functions.TopKFns.fromBlob(b))))) return None
-    // count(DISTINCT tp_date): provable only when every (filtered)
-    // file is day-contained — any straddler declines the whole rewrite
-    val distinctDays: Option[Long] =
-      if (!flat.exists(_.isInstanceOf[DistinctDates])) None
-      else lake.distinctDayCounts(session, table, _ => Nil, fileFilter)
-        match {
-          case None => return None
-          case Some(m) => Some(m.values.headOption.getOrElse(0L))
-        }
-    val values: Seq[Any] = flat.map {
-      case CountStar => parts.nRows
-      case CountCol(a) => parts.counts.getOrElse(a.name, 0L)
-      case MinCol(a) =>
-        CatalystTypeConverters.convertToCatalyst(
-          parts.mins.get(a.name).orNull)
-      case MaxCol(a) =>
-        CatalystTypeConverters.convertToCatalyst(
-          parts.maxs.get(a.name).orNull)
-      case SumCol(a) =>
-        parts.sums.get(a.name).map(s => Long.box(s.toLong)).orNull
-      case AvgCol(a) =>
-        val n = parts.counts.getOrElse(a.name, 0L)
-        if (n == 0L) null // SQL avg of no rows
-        else parts.sums.get(a.name)
-          .map(s => Double.box(s.toDouble / n)).orNull
-      case NdvCol(a) => Long.box(parts.ndvs.getOrElse(a.name, 0L))
-      case QuantileCol(a, prob) =>
-        parts.kllBlobs.get(a.name)
-          .flatMap(b =>
-            graft.functions.QuantileFns.blobQuantile(b, prob))
-          .map(Double.box).orNull
-      case TopKCol(a, k) => graft.functions.TopKFns.topKInternal(
-        graft.functions.TopKFns.fromBlob(parts.mgBlobs(a.name)), k)
-      case DistinctDates(_) => Long.box(distinctDays.get)
-      case Passthrough(v) => v // Literal.value is already internal
-    }
-    logInfo(s"metadata-aggregate rewrite fired for lake table '$table': " +
-      s"${flat.size} aggregates answered from the manifest+sidecar")
-    Some(LocalRelation(agg.aggregateExpressions.map(_.toAttribute),
-      Seq(InternalRow.fromSeq(values))))
+    val specs = agg.aggregateExpressions.map {
+      case a: AttributeReference => keyIndex(grouping, a).map(GroupKey)
+      case al @ Alias(child, _) =>
+        keyIndex(grouping, child).map(GroupKey)
+          .orElse(classify(al)).orElse(derivedKey(grouping, al))
+      case e => classify(e)
+    }.map(_.getOrElse(return None))
+    val shape =
+      Shape(agg, lr, lake, table, keys, grain, bands, fileFilter, specs)
+    // top-k has no scan partial to merge, and timed shapes keep the
+    // scan for it even when nothing straddles
+    if (shape.timed && specs.exists(_.isInstanceOf[TopKCol])) None
+    else Some(shape)
   }
 
-  /** TIME-BAND hybrid rewrite — the reference's dominant query shape
-    * (`WHERE tp_timestamp BETWEEN a AND b`, optionally with partition
-    * conjuncts) as plain SQL: files the manifest proves fully inside
-    * the band (and the sidecar proves null-ts-free) contribute their
-    * counts/sums/ranges as a one-row [[LocalRelation]]; only the
-    * edge-straddling files stay IN the plan, as a partial aggregate
-    * over a relation restricted to exactly those files (the original
-    * filter still applied row-level), merged by a final aggregate
-    * carrying the original output attribute ids. For a month-wide band
-    * over a year of files, the scan is two boundary days — through
-    * SQL, with no API call. The classification runs metadata-sized
-    * jobs at optimize time; the straddler scan executes distributed in
-    * the plan, never at optimize time. Declines (whole plan untouched)
-    * when no file is provably contained — then the zone-map FileIndex
-    * already prunes the scan to the overlapping files and a hybrid
-    * buys nothing.
+  private def keyIndex(
+      grouping: Seq[Expression], e: Expression): Option[Int] = {
+    val i = grouping.indexWhere(_.semanticEquals(e))
+    if (i < 0) None else Some(i)
+  }
+
+  /** An output DERIVED from group keys only — `cast(day_bucket AS
+    * date)`, `year(tp_date)` — is served by substituting the keys into
+    * the expression (Literals on the metadata side, the union's key
+    * columns on the straddler side). Deterministic, aggregate-free,
+    * evaluable, references ⊆ grouping attributes.
     */
-  /** Split a WHERE into a `tp_timestamp` band in micros and the
-    * residual non-band conjuncts. Strict bounds convert exactly
-    * (`> X` ≡ `>= X+1µs`); equality is the one-point band. `tp_date`
-    * comparisons fold into the SAME micros band (epoch-day × 86.4e9 —
-    * exact in a long for every representable date) because the engine
-    * derives `tp_date = date_trunc(day, tp_timestamp)` under its
-    * always-UTC sessions, so `tp_date >= D` ≡ `tp_timestamp >= D
-    * 00:00:00 UTC` row-for-row; pre-0.7 reference users filter on
-    * tp_date and previously paid a scan of every overlapping file
-    * (r16 verdict task 5). Date folding is gated on the READER
-    * session being UTC too — a non-UTC session parses date literals
-    * the same (days are TZ-free) but signals a deployment where the
-    * UTC-writer convention may not hold, so date conjuncts then land
-    * in the residual and the rewrite declines to the zoned scan.
-    * None when a band conjunct has a null/odd literal;
-    * `(lo, hi, 0, Some(cond))` when no band conjunct exists.
-    * Shared by [[rewriteBand]] and the explain-lint probe.
+  private def derivedKey(
+      grouping: Seq[Expression], al: Alias): Option[Spec] = {
+    val e = al.child
+    if (!e.deterministic) return None
+    // attrs are Unevaluable but get substituted before any eval — only
+    // OTHER unevaluable nodes (subqueries, grouping__id, ...) disqualify
+    if (e.find(x => x.isInstanceOf[AggregateExpression] ||
+      x.isInstanceOf[PlanExpression[_]] ||
+      (x.isInstanceOf[Unevaluable] &&
+        !x.isInstanceOf[AttributeReference])).isDefined) return None
+    if (e.references.isEmpty) return None
+    if (!e.references.toSeq.forall {
+      case a: AttributeReference => keyIndex(grouping, a).isDefined
+      case _ => false
+    }) return None
+    Some(GroupDerived(e))
+  }
+
+  /** Steps 2 and 3: one metadata probe, then the emit. */
+  private def rewrite(m: Shape): Option[LogicalPlan] = {
+    val grouping = m.agg.groupingExpressions
+    val dirCols = m.keys.collect { case PartKey(a) => a.name }
+    val groupOf: String => Seq[String] =
+      if (dirCols.isEmpty) _ => Nil
+      else f => {
+        val pv = m.lake.partitionValues(m.lake.relOf(m.table, f))
+        dirCols.map(pv.getOrElse(_, null))
+      }
+    val time =
+      if (!m.timed) None
+      else Some(Lake.TimeSplit(m.bands.getOrElse(Seq(Lake.FullRange)),
+        m.grain.map(g => g.idOf _)))
+    val probe = m.lake.metaAggregate(session, m.table, needsOf(m.specs),
+      groupOf, m.fileFilter, time).getOrElse(return None)
+    // untimed shapes are all-or-nothing; a timed hybrid buys nothing
+    // unless metadata answers at least one file
+    if (if (m.timed) probe.contained == 0 else probe.straddlers.nonEmpty)
+      return None
+    val groups =
+      if (m.keys.isEmpty && probe.groups.isEmpty)
+        Seq(Nil -> Lake.StatsAggParts.empty)
+      else probe.groups
+    if (!groups.forall { case (_, p) => m.specs.forall(exact(p, _, m.timed)) })
+      return None
+    // key values per group: a bucketed probe key leads with the bucket
+    // id, and each bucket key's value derives from that bucket's start
+    // (constant across the bucket by the refinement gate)
+    val rows: Seq[(Seq[Any], Lake.StatsAggParts)] = groups.map {
+      case (key, p) =>
+        val (bucket, dirs) =
+          if (m.grain.isDefined) (key.head.toLong, key.tail) else (0L, key)
+        val dirVals = dirs.iterator
+        (m.keys.map {
+          case BucketKey(_, valueOf) => valueOf(m.grain.get.startUs(bucket))
+          case PartKey(a) => dirValueToInternal(dirVals.next(), a.dataType)
+        }, p)
+    }
+    // an extract key can map several buckets onto one value (hour of
+    // day across days): then even a contained answer needs the merge
+    if (probe.straddlers.nonEmpty || rows.map(_._1).distinct.size < rows.size)
+      return hybrid(m, rows, probe.straddlers)
+    logInfo(s"metadata-aggregate rewrite fired for lake table " +
+      s"'${m.table}': ${rows.size} group(s) answered from metadata")
+    Some(LocalRelation(m.agg.aggregateExpressions.map(_.toAttribute),
+      rows.map { case (kv, p) =>
+        InternalRow.fromSeq(m.specs.map(finalValue(grouping, kv, p, _)))
+      }))
+  }
+
+  /** Exactness gates on one group's metadata partial. */
+  private def exact(p: Lake.StatsAggParts, s: Spec, timed: Boolean)
+      : Boolean = s match {
+    // a sum past Long.MaxValue has no exact BIGINT value
+    case SumCol(a) => p.sums.get(a.name).forall(_.isValidLong)
+    // past 2^53 a scan's double accumulation can drift from the exact
+    // quotient; timed hybrids merge avg as that quotient either way
+    case AvgCol(a) =>
+      timed || p.sums.get(a.name).forall(_.abs <= MaxExactAvgSum)
+    // the MERGED top-k sketch must be provably exact (no eviction)
+    case TopKCol(a, _) => p.mgBlobs.get(a.name).exists(b =>
+      graft.functions.TopKFns.isExact(graft.functions.TopKFns.fromBlob(b)))
+    // every file must lie on one provable day
+    case DistinctDates(_) => p.dayIds.isDefined
+    case _ => true
+  }
+
+  /** FINAL value of one output for one fully metadata-served group. */
+  private def finalValue(grouping: Seq[Expression], kv: Seq[Any],
+      p: Lake.StatsAggParts, s: Spec): Any = s match {
+    case GroupKey(i) => kv(i)
+    // keys become Literals, then one driver-side eval (derivedKey gated
+    // determinism and evaluability; a throwing expr falls open)
+    case GroupDerived(e) => e.transform {
+      case a: AttributeReference if keyIndex(grouping, a).isDefined =>
+        val i = keyIndex(grouping, a).get
+        Literal(kv(i), grouping(i).dataType)
+    }.eval(null)
+    case DistinctDates(_) => Long.box(p.dayIds.get.size.toLong)
+    case Passthrough(v) => v // Literal.value is already internal
+    case AvgCol(a) =>
+      val n = p.counts.getOrElse(a.name, 0L)
+      if (n == 0L) null // SQL avg of no rows
+      else p.sums.get(a.name).map(v => Double.box(v.toDouble / n)).orNull
+    case NdvCol(a) => Long.box(p.ndvs.getOrElse(a.name, 0L))
+    case QuantileCol(a, prob) => p.kllBlobs.get(a.name)
+      .flatMap(graft.functions.QuantileFns.blobQuantile(_, prob))
+      .map(Double.box).orNull
+    case TopKCol(a, k) => graft.functions.TopKFns.topKInternal(
+      graft.functions.TopKFns.fromBlob(p.mgBlobs(a.name)), k)
+    case other => metaSlotValues(p, other).head
+  }
+
+  /** The hybrid emit: local metadata partial rows (key slots, then value
+    * slots) unioned with a partial aggregate over the straddler files
+    * ONLY — the original child with its relation restricted to those
+    * files and its filter intact, grouped by the ORIGINAL grouping
+    * expressions so straddler rows land in their true keys (null ts
+    * rows in the null bucket) — under one merge aggregate that carries
+    * the original output names and ids. The grouped merge IS the key
+    * alignment. None when an output has no scan partial to merge.
     */
+  private def hybrid(m: Shape, rows: Seq[(Seq[Any], Lake.StatsAggParts)],
+      straddlers: Seq[String]): Option[LogicalPlan] = {
+    val grouping = m.agg.groupingExpressions
+    val valueSpecs = m.specs.filter {
+      case _: GroupKey | _: GroupDerived => false
+      case _ => true
+    }
+    val slotGroups: Seq[Seq[AttributeReference]] =
+      valueSpecs.zipWithIndex.map { case (s, i) =>
+        slotTypesOf(s).zipWithIndex.map { case (dt, j) =>
+          AttributeReference(s"_meta_v${i}_$j", dt)()
+        }
+      }
+    val partialValues: Seq[NamedExpression] =
+      valueSpecs.zip(slotGroups).flatMap { case (s, slots) =>
+        partialSlotExprs(s, slots).getOrElse(return None)
+      }
+    val keySlots = grouping.zipWithIndex.map { case (g, i) =>
+      AttributeReference(s"_meta_k$i", g.dataType)()
+    }
+    val local = LocalRelation(keySlots ++ slotGroups.flatten,
+      rows.map { case (kv, p) =>
+        InternalRow.fromSeq(kv ++ valueSpecs.flatMap(metaSlotValues(p, _)))
+      })
+    val fsRel = m.lr.relation.asInstanceOf[HadoopFsRelation]
+    val straddlerRel = HadoopFsRelation(
+      new InMemoryFileIndex(session,
+        straddlers.map(new org.apache.hadoop.fs.Path(_)),
+        Map("basePath" -> m.lake.tableDir(m.table)), None),
+      fsRel.partitionSchema, fsRel.dataSchema, fsRel.bucketSpec,
+      fsRel.fileFormat, fsRel.options)(session)
+    val swapped = m.agg.child.transform {
+      case l: LogicalRelation if l eq m.lr => m.lr.copy(relation = straddlerRel)
+    }
+    // prune the scan to the aggregated and grouped columns (the
+    // optimizer's ColumnPruning already ran; without this Project the
+    // straddler scan would read every column)
+    val neededIds = (valueSpecs.collect { case c: ColSpec => c.a.exprId } ++
+      grouping.flatMap(_.references.map(_.exprId))).toSet
+    val needed = m.agg.child.output.filter(a => neededIds.contains(a.exprId))
+    val pruned = if (needed.nonEmpty) Project(needed, swapped) else swapped
+    val partialKeys: Seq[NamedExpression] = grouping.zipWithIndex.map {
+      case (a: AttributeReference, _) => a
+      case (g, i) => Alias(g, s"_meta_k$i")()
+    }
+    val union = Union(Seq(local,
+      Aggregate(grouping, partialKeys ++ partialValues, pruned)))
+    val out = union.output
+    val offsets = slotGroups.scanLeft(grouping.size)(_ + _.size).iterator
+    val merged: Seq[NamedExpression] =
+      m.agg.aggregateExpressions.zip(m.specs).map {
+        case (orig, GroupKey(k)) =>
+          Alias(out(k), orig.name)(exprId = orig.exprId)
+        // functionally determined by the keys: substitute the union's
+        // key columns into the expression
+        case (orig, GroupDerived(e)) => Alias(e.transform {
+          case a: AttributeReference if keyIndex(grouping, a).isDefined =>
+            out(keyIndex(grouping, a).get)
+        }, orig.name)(exprId = orig.exprId)
+        case (orig, s) =>
+          mergeExprFor(s, orig, out, offsets.next()).getOrElse(return None)
+      }
+    logInfo(s"metadata-aggregate rewrite fired for lake table " +
+      s"'${m.table}': ${rows.size} group(s) from metadata + " +
+      s"${straddlers.size} straddler file(s) scanned in-plan")
+    Some(Aggregate(out.take(grouping.size), merged, union))
+  }
+
+  /** The per-column metadata each spec reads, built once. */
+  private def needsOf(specs: Seq[Spec]): Lake.ColumnNeeds = {
+    def names(pf: PartialFunction[Spec, AttributeReference]): Set[String] =
+      specs.collect(pf).map(_.name).toSet
+    Lake.ColumnNeeds(
+      counted = names { case CountCol(a) => a; case AvgCol(a) => a },
+      ranged = names { case MinCol(a) => a; case MaxCol(a) => a },
+      summed = names { case SumCol(a) => a; case AvgCol(a) => a },
+      ndv = names { case NdvCol(a) => a },
+      kll = names { case QuantileCol(a, _) => a },
+      topk = names { case TopKCol(a, _) => a })
+  }
+
   private def conjunctsOf(e: Expression): Seq[Expression] = e match {
     case And(l, r) => conjunctsOf(l) ++ conjunctsOf(r)
     case x => Seq(x)
   }
 
-  private def splitBand(cond: Expression)
-      : Option[(Long, Long, Int, Option[Expression])] =
-    splitBandExprs(conjunctsOf(cond)).map { case (lo, hi, n, rest) =>
-      (lo, hi, n, rest.reduceOption(And))
-    }
-
-  /** [[splitBand]]'s core over an explicit conjunct list — reused by
-    * [[splitBands]] to fold each disjunct of an OR-of-bands.
+  /** Split a conjunct list into a `tp_timestamp` band in micros
+    * `(lo, hi, band conjunct count, residual non-band conjuncts)`.
+    * Strict bounds convert exactly (`> X` ≡ `>= X+1µs`); equality is the
+    * one-point band. `tp_date` comparisons fold into the SAME micros
+    * band (epoch-day × [[TpSchema.DayUs]], exact in a long for every
+    * representable date) because the engine derives `tp_date =
+    * date_trunc(day, tp_timestamp)` under its always-UTC sessions, so
+    * `tp_date >= D` ≡ `tp_timestamp >= D 00:00:00 UTC` row-for-row.
+    * Date folding is gated on the READER session being UTC too — a
+    * non-UTC session signals a deployment where the UTC-writer
+    * convention may not hold, so date conjuncts then land in the
+    * residual and the rewrite declines to the zoned scan. None when a
+    * band conjunct has a null/odd literal.
     */
   private def splitBandExprs(cs: Seq[Expression])
       : Option[(Long, Long, Int, Seq[Expression])] = {
-    val utc = graft.lake.TpSchema.isUtcZone(
+    val utc = TpSchema.isUtcZone(
       session.sessionState.conf.sessionLocalTimeZone)
     def isTs(a: AttributeReference): Boolean =
-      a.name == graft.lake.TpSchema.Timestamp &&
+      a.name == TpSchema.Timestamp &&
         a.dataType == org.apache.spark.sql.types.TimestampType
     def isDate(a: AttributeReference): Boolean =
-      utc && a.name == graft.lake.TpSchema.Date &&
+      utc && a.name == TpSchema.Date &&
         a.dataType == org.apache.spark.sql.types.DateType
     // a comparison leaf as half-band bounds in micros:
     // (loBound, hiBound) with None = unbounded on that side; returns
@@ -684,50 +751,20 @@ final case class MetadataAggregateRule(session: SparkSession)
               else Band(Some(0L), Some(-1L)) // unsatisfiable: empty
           }
       }
-    def classifyLeaf(e: Expression): (Half, Expression) = e match {
-      case GreaterThanOrEqual(a: AttributeReference, l: Literal) =>
-        (half("ge", a, l), e)
-      case GreaterThan(a: AttributeReference, l: Literal) =>
-        (half("gt", a, l), e)
-      case LessThanOrEqual(a: AttributeReference, l: Literal) =>
-        (half("le", a, l), e)
-      case LessThan(a: AttributeReference, l: Literal) =>
-        (half("lt", a, l), e)
-      case EqualTo(a: AttributeReference, l: Literal) =>
-        (half("eq", a, l), e)
-      // reversed operand orders: lit OP attr ≡ attr FLIP(OP) lit
-      case GreaterThanOrEqual(l: Literal, a: AttributeReference) =>
-        (half("le", a, l), e)
-      case GreaterThan(l: Literal, a: AttributeReference) =>
-        (half("lt", a, l), e)
-      case LessThanOrEqual(l: Literal, a: AttributeReference) =>
-        (half("ge", a, l), e)
-      case LessThan(l: Literal, a: AttributeReference) =>
-        (half("gt", a, l), e)
-      case EqualTo(l: Literal, a: AttributeReference) =>
-        (half("eq", a, l), e)
-      // bucket-expression comparisons, both orientations
-      case GreaterThanOrEqual(b, l: Literal) if isBucketExpr(b) =>
-        (bucketHalf("ge", b, l), e)
-      case GreaterThan(b, l: Literal) if isBucketExpr(b) =>
-        (bucketHalf("gt", b, l), e)
-      case LessThanOrEqual(b, l: Literal) if isBucketExpr(b) =>
-        (bucketHalf("le", b, l), e)
-      case LessThan(b, l: Literal) if isBucketExpr(b) =>
-        (bucketHalf("lt", b, l), e)
-      case EqualTo(b, l: Literal) if isBucketExpr(b) =>
-        (bucketHalf("eq", b, l), e)
-      case GreaterThanOrEqual(l: Literal, b) if isBucketExpr(b) =>
-        (bucketHalf("le", b, l), e)
-      case GreaterThan(l: Literal, b) if isBucketExpr(b) =>
-        (bucketHalf("lt", b, l), e)
-      case LessThanOrEqual(l: Literal, b) if isBucketExpr(b) =>
-        (bucketHalf("ge", b, l), e)
-      case LessThan(l: Literal, b) if isBucketExpr(b) =>
-        (bucketHalf("gt", b, l), e)
-      case EqualTo(l: Literal, b) if isBucketExpr(b) =>
-        (bucketHalf("eq", b, l), e)
-      case _ => (NotBand, e)
+    def classifyLeaf(e: Expression): Half = e match {
+      case cmp: BinaryComparison =>
+        // lit OP x ≡ x FLIP(OP) lit
+        val (x, l, flip) = (cmp.left, cmp.right) match {
+          case (x, l: Literal) => (x, l, false)
+          case (l: Literal, x) => (x, l, true)
+          case _ => return NotBand
+        }
+        (bandOp(cmp, flip), x) match {
+          case (Some(op), a: AttributeReference) => half(op, a, l)
+          case (Some(op), b) if isBucketExpr(b) => bucketHalf(op, b, l)
+          case _ => NotBand
+        }
+      case _ => NotBand
     }
     var lo = Long.MinValue
     var hi = Long.MaxValue
@@ -742,20 +779,21 @@ final case class MetadataAggregateRule(session: SparkSession)
             if isTs(a) || isDate(a) => ()
         case IsNotNull(e) if isBucketExpr(e) => ()
         case other => classifyLeaf(other) match {
-          case (Band(l, h), _) =>
+          case Band(l, h) =>
             l.foreach(v => lo = math.max(lo, v))
             h.foreach(v => hi = math.min(hi, v))
             nBand += 1
-          case (Bad, _) => return None
-          case (NotBand, e) => rest += e
+          case Bad => return None
+          case NotBand => rest += other
         }
       }
     }
     Some((lo, hi, nBand, rest.result()))
   }
 
-  /** Generalize [[splitBand]] to an OR of bands (r17 verdict task 6 —
-    * the multi-window dashboard shape, `WHERE ts BETWEEN a AND b OR ts
+  /** A WHERE as `(disjoint sorted micros bands, band conjunct count,
+    * residual)`, folding [[splitBandExprs]] over an OR of bands too
+    * (the multi-window dashboard shape, `WHERE ts BETWEEN a AND b OR ts
     * BETWEEN c AND d`): at most ONE conjunct may be a disjunction
     * whose EVERY branch folds to a pure band (band leaves only, no
     * residual inside a branch — a non-band residual can't be factored
@@ -831,7 +869,7 @@ final case class MetadataAggregateRule(session: SparkSession)
       grest.reduceOption(And)))
   }
 
-  // ---- band-hybrid slot machinery (shared by both band rewrites) ----
+  // ---- hybrid slot machinery ----
   //
   // Most aggregates occupy ONE union slot (their mergeable partial is
   // themselves: counts/sums add, ranges re-extremize). `avg` needs TWO
@@ -851,7 +889,7 @@ final case class MetadataAggregateRule(session: SparkSession)
       // estimates don't add, sketches do
       case NdvCol(_) => Seq(org.apache.spark.sql.types.BinaryType)
       case QuantileCol(_, _) => Seq(org.apache.spark.sql.types.BinaryType)
-      case _ => Seq(LongType)
+      case _ => Nil
     }
 
   /** Metadata-partial values for one spec, one per slot. */
@@ -871,33 +909,12 @@ final case class MetadataAggregateRule(session: SparkSession)
       parts.counts.getOrElse(a.name, 0L))
     case NdvCol(a) => Seq(parts.ndvBlobs.get(a.name).orNull)
     case QuantileCol(a, _) => Seq(parts.kllBlobs.get(a.name).orNull)
-    case _ => Seq(null)
+    case _ => Nil
   }
 
-  /** FINAL value for one spec when the band is fully contained (no
-    * straddler scan): the same arithmetic the ungrouped/grouped
-    * metadata paths use.
-    */
-  private def metaFinalValue(parts: Lake.StatsAggParts, s: Spec): Any =
-    s match {
-      case AvgCol(a) =>
-        val n = parts.counts.getOrElse(a.name, 0L)
-        if (n == 0L) null
-        else parts.sums.get(a.name)
-          .map(v => Double.box(v.toDouble / n)).orNull
-      case NdvCol(a) => Long.box(parts.ndvs.getOrElse(a.name, 0L))
-      case QuantileCol(a, prob) =>
-        parts.kllBlobs.get(a.name)
-          .flatMap(b =>
-            graft.functions.QuantileFns.blobQuantile(b, prob))
-          .map(Double.box).orNull
-      case TopKCol(a, k) => graft.functions.TopKFns.topKInternal(
-        graft.functions.TopKFns.fromBlob(parts.mgBlobs(a.name)), k)
-      case other => metaSlotValues(parts, other).head
-    }
-
   /** Straddler-scan partial aggregates for one spec, aliased onto its
-    * slots.
+    * slots. None for a spec with no mergeable partial (top-k, distinct
+    * days, a literal): the hybrid then declines.
     */
   private def partialSlotExprs(
       s: Spec, slots: Seq[AttributeReference]): Option[Seq[NamedExpression]] = {
@@ -958,772 +975,9 @@ final case class MetadataAggregateRule(session: SparkSession)
         exprId = orig.exprId))
       case _ => None
     }
-
-  private def rewriteBand(
-      agg: Aggregate, lr: LogicalRelation,
-      lake: Lake, table: String,
-      cond: Expression): Option[LogicalPlan] = {
-    val (bands, nBand, partCond) = splitBands(cond).getOrElse(return None)
-    if (nBand == 0 || bands.isEmpty) return None
-    val fileFilter: String => Boolean = partCond match {
-      case None => _ => true
-      case Some(pc) =>
-        partitionFilePredicate(lake, table, pc).getOrElse(return None)
-    }
-    val specs = agg.aggregateExpressions.map(classify)
-    if (specs.exists(s => s.isEmpty ||
-      s.get.isInstanceOf[Passthrough] ||
-      // top-k sketches don't ride the band slot machinery (yet) —
-      // decline to the scan
-      s.get.isInstanceOf[TopKCol])) return None
-    val flat = specs.flatten
-    // count(DISTINCT tp_date) under a band — "active days in range":
-    // day sets don't slot-merge across a metadata/scan split, so this
-    // serves only FULLY CONTAINED (every ranged file day-contained and
-    // provably inside/outside the bands; straddlers decline below)
-    val bandedDistinct: Option[Long] =
-      if (!flat.exists(_.isInstanceOf[DistinctDates])) None
-      else lake.distinctDayCountsBanded(session, table, bands,
-        fileFilter) match {
-        case None => return None
-        case Some(n) => Some(n)
-      }
-    val cols = flat.collect {
-      case CountCol(a) => a.name
-      case MinCol(a) => a.name
-      case MaxCol(a) => a.name
-      case SumCol(a) => a.name
-      case AvgCol(a) => a.name
-      case NdvCol(a) => a.name
-      case QuantileCol(a, _) => a.name
-    }.distinct
-    val ndvColsB = flat.collect { case NdvCol(a) => a.name }.toSet
-    val kllColsB = flat.collect { case QuantileCol(a, _) => a.name }.toSet
-    val rangeCols = flat.collect {
-      case MinCol(a) => a.name
-      case MaxCol(a) => a.name
-    }.toSet
-    val sumColsS = flat.collect {
-      case SumCol(a) => a.name
-      case AvgCol(a) => a.name
-    }.toSet
-    if (!lake.hasData(session, table)) return None
-    val schema = lake.schemaOf(session, table)
-    if (!cols.forall(schema.fieldNames.contains)) return None
-    val (parts, straddlers, containedCount) = lake.timeMultiBandParts(
-      session, table, bands, cols, schema, rangeCols, sumColsS,
-      fileFilter, ndvColsB, kllColsB)
-    if (containedCount <= 0) return None // hybrid buys nothing
-    if (!flat.collect { case SumCol(a) => a.name }.toSet[String].forall(c =>
-      parts.sums.get(c).forall(_.isValidLong)))
-      return None
-
-    if (straddlers.isEmpty) {
-      // nothing to scan: emit the final row directly
-      logInfo(s"time-band rewrite fired for '$table': fully contained, " +
-        s"no straddlers")
-      return Some(LocalRelation(
-        agg.aggregateExpressions.map(_.toAttribute),
-        Seq(InternalRow.fromSeq(flat.map {
-          case DistinctDates(_) => Long.box(bandedDistinct.get)
-          case s => metaFinalValue(parts, s)
-        }))))
-    }
-    // a straddler's rows would need the distinct-day slot merge the
-    // classifier can't express — decline to the scan (slot machinery
-    // below has no DistinctDates shape)
-    if (bandedDistinct.isDefined) return None
-
-    val slotGroups: Seq[Seq[AttributeReference]] =
-      flat.zipWithIndex.map { case (sp, i) =>
-        slotTypesOf(sp).zipWithIndex.map { case (dt, j) =>
-          AttributeReference(s"_band_${i}_$j", dt)()
-        }
-      }
-    val localAttrs: Seq[AttributeReference] = slotGroups.flatten
-    val localValues: Seq[Any] = flat.flatMap(metaSlotValues(parts, _))
-    val local = LocalRelation(localAttrs,
-      Seq(InternalRow.fromSeq(localValues)))
-
-    // straddler-restricted relation with the ORIGINAL output attrs —
-    // the filter/projections above keep their bindings untouched
-    val fsRel = lr.relation.asInstanceOf[HadoopFsRelation]
-    val straddlerIndex =
-      new org.apache.spark.sql.execution.datasources.InMemoryFileIndex(
-        session, straddlers.map(new org.apache.hadoop.fs.Path(_)),
-        Map("basePath" -> lake.tableDir(table)), None)
-    val straddlerRel = HadoopFsRelation(straddlerIndex,
-      fsRel.partitionSchema, fsRel.dataSchema, fsRel.bucketSpec,
-      fsRel.fileFormat, fsRel.options)(session)
-    val swappedChild = agg.child.transform {
-      case l: LogicalRelation if l eq lr => lr.copy(relation = straddlerRel)
-    }
-    // prune the scan to the aggregated columns (the optimizer's
-    // ColumnPruning already ran; without this Project the straddler
-    // scan would read every column)
-    val neededNames = flat.collect {
-      case CountCol(a) => a; case MinCol(a) => a
-      case MaxCol(a) => a; case SumCol(a) => a; case AvgCol(a) => a
-      case NdvCol(a) => a; case QuantileCol(a, _) => a
-    }.map(_.exprId).toSet
-    val needed = agg.child.output.filter(a => neededNames.contains(a.exprId))
-    val pruned =
-      if (needed.nonEmpty) Project(needed, swappedChild)
-      else swappedChild // pure count(*): the filter column is read anyway
-    val partialExprs: Seq[NamedExpression] =
-      flat.zip(slotGroups).flatMap { case (s, slots) =>
-        partialSlotExprs(s, slots).getOrElse(return None)
-      }
-    val partial = Aggregate(Nil, partialExprs, pruned)
-    val union = Union(Seq(local, partial))
-    // merge under the ORIGINAL output names/exprIds: counts and sums
-    // add, ranges re-extremize, avg divides merged sum by merged count
-    val unionOut = union.output
-    val offsets: Seq[Int] =
-      slotGroups.scanLeft(0)(_ + _.size).init
-    val mergeExprs: Seq[NamedExpression] =
-      agg.aggregateExpressions.zip(flat).zip(offsets).map {
-        case ((orig, s), off) =>
-          mergeExprFor(s, orig, unionOut, off).getOrElse(return None)
-      }
-    logInfo(s"time-band rewrite fired for '$table': $containedCount " +
-      s"contained files from metadata, ${straddlers.size} straddlers " +
-      "scanned in-plan")
-    Some(Aggregate(Nil, mergeExprs, union))
-  }
-
-  /** GROUPED band hybrid: `GROUP BY partition columns` + a
-    * tp_timestamp band. Per-group metadata partials over the contained
-    * files become LOCAL rows (group-key slots + value slots); the
-    * straddler scan keeps the SAME grouping over the restricted
-    * relation, and the final GROUP BY over the union merges metadata
-    * groups with scanned groups wherever they overlap — no group
-    * alignment logic at all, the grouped merge IS the alignment.
-    */
-  private def rewriteBandGrouped(
-      agg: Aggregate, lr: LogicalRelation,
-      lake: Lake, table: String,
-      cond: Expression): Option[LogicalPlan] = {
-    val (bands, nBand, partCond) = splitBands(cond).getOrElse(return None)
-    if (nBand == 0 || bands.isEmpty) return None
-    val fileFilter: String => Boolean = partCond match {
-      case None => _ => true
-      case Some(pc) =>
-        partitionFilePredicate(lake, table, pc).getOrElse(return None)
-    }
-    val groupAttrs = agg.groupingExpressions
-      .map(_.asInstanceOf[AttributeReference])
-    if (!groupAttrs.forall(a => a.dataType match {
-      case IntegerType | LongType | StringType => true
-      case _ => false
-    })) return None
-    def keyIndex(a: AttributeReference): Option[Int] = {
-      val i = groupAttrs.indexWhere(_.exprId == a.exprId)
-      if (i < 0) None else Some(i)
-    }
-    val specs: Seq[Option[Spec]] = agg.aggregateExpressions.map {
-      case a: AttributeReference => keyIndex(a).map(GroupKey)
-      case Alias(a: AttributeReference, _) => keyIndex(a).map(GroupKey)
-      case e => classify(e)
-    }
-    if (specs.exists(s => s.isEmpty || s.get.isInstanceOf[Passthrough] ||
-      s.get.isInstanceOf[DistinctDates] || // day sets don't slot-merge
-      s.get.isInstanceOf[TopKCol])) // no band slot machinery for top-k
-      return None
-    val flat = specs.flatten
-    val valueSpecs = flat.filterNot(_.isInstanceOf[GroupKey])
-    val cols = valueSpecs.collect {
-      case CountCol(a) => a.name
-      case MinCol(a) => a.name
-      case MaxCol(a) => a.name
-      case SumCol(a) => a.name
-      case AvgCol(a) => a.name
-      case NdvCol(a) => a.name
-      case QuantileCol(a, _) => a.name
-    }.distinct
-    val rangeCols = valueSpecs.collect {
-      case MinCol(a) => a.name
-      case MaxCol(a) => a.name
-    }.toSet
-    val sumColsS = valueSpecs.collect {
-      case SumCol(a) => a.name
-      case AvgCol(a) => a.name
-    }.toSet
-    val ndvColsG = valueSpecs.collect { case NdvCol(a) => a.name }.toSet
-    val kllColsG =
-      valueSpecs.collect { case QuantileCol(a, _) => a.name }.toSet
-    if (!lake.hasData(session, table)) return None
-    val schema = lake.schemaOf(session, table)
-    if (!cols.forall(schema.fieldNames.contains)) return None
-    val (groups, straddlers, containedCount) =
-      lake.timeBandPartsGroupedMulti(
-        session, table, bands, cols, schema, rangeCols, sumColsS,
-        f => {
-          val pv = lake.partitionValues(lake.relOf(table, f))
-          groupAttrs.map(a => pv.getOrElse(a.name, null))
-        }, fileFilter, ndvColsG, kllColsG)
-    if (containedCount <= 0) return None // hybrid buys nothing
-    val sumOnlyS = valueSpecs.collect { case SumCol(a) => a.name }.toSet
-    if (!groups.forall { case (_, p) =>
-      sumOnlyS.forall(c => p.sums.get(c).forall(_.isValidLong))
-    }) return None
-
-    if (straddlers.isEmpty) {
-      // fully contained: emit the final rows directly
-      val rows = groups.map { case (key, parts) =>
-        InternalRow.fromSeq(flat.map {
-          case GroupKey(i) =>
-            dirValueToInternal(key(i), groupAttrs(i).dataType)
-          case s => metaFinalValue(parts, s)
-        })
-      }
-      logInfo(s"grouped time-band rewrite fired for '$table': fully " +
-        s"contained, ${groups.size} groups from metadata")
-      return Some(LocalRelation(
-        agg.aggregateExpressions.map(_.toAttribute), rows))
-    }
-
-    // local side: key slots then value slots, canonical order (avg
-    // spans two value slots — exact decimal sum + count)
-    val nKeys = groupAttrs.size
-    val keySlots = groupAttrs.zipWithIndex.map { case (a, i) =>
-      AttributeReference(s"_bgk_$i", a.dataType)()
-    }
-    val valSlotGroups: Seq[Seq[AttributeReference]] =
-      valueSpecs.zipWithIndex.map { case (sp, i) =>
-        slotTypesOf(sp).zipWithIndex.map { case (dt, j) =>
-          AttributeReference(s"_bgv_${i}_$j", dt)()
-        }
-      }
-    val valSlots = valSlotGroups.flatten
-    val localRows = groups.map { case (key, parts) =>
-      InternalRow.fromSeq(
-        groupAttrs.indices.map(i =>
-          dirValueToInternal(key(i), groupAttrs(i).dataType)) ++
-          valueSpecs.flatMap(s => metaSlotValues(parts, s)))
-    }
-    val local = LocalRelation(keySlots ++ valSlots, localRows)
-
-    // straddler side: SAME grouping over the restricted relation
-    val fsRel = lr.relation.asInstanceOf[HadoopFsRelation]
-    val straddlerIndex =
-      new org.apache.spark.sql.execution.datasources.InMemoryFileIndex(
-        session, straddlers.map(new org.apache.hadoop.fs.Path(_)),
-        Map("basePath" -> lake.tableDir(table)), None)
-    val straddlerRel = HadoopFsRelation(straddlerIndex,
-      fsRel.partitionSchema, fsRel.dataSchema, fsRel.bucketSpec,
-      fsRel.fileFormat, fsRel.options)(session)
-    val swappedChild = agg.child.transform {
-      case l: LogicalRelation if l eq lr => lr.copy(relation = straddlerRel)
-    }
-    val neededIds = (valueSpecs.collect {
-      case CountCol(a) => a; case MinCol(a) => a
-      case MaxCol(a) => a; case SumCol(a) => a; case AvgCol(a) => a
-      case NdvCol(a) => a; case QuantileCol(a, _) => a
-    } ++ groupAttrs).map(_.exprId).toSet
-    val needed = agg.child.output.filter(a => neededIds.contains(a.exprId))
-    val pruned =
-      if (needed.nonEmpty) Project(needed, swappedChild) else swappedChild
-    val partialValueExprs: Seq[NamedExpression] =
-      valueSpecs.zip(valSlotGroups).flatMap { case (s, slots) =>
-        partialSlotExprs(s, slots).getOrElse(return None)
-      }
-    val partial = Aggregate(groupAttrs,
-      groupAttrs.map(a => a: NamedExpression) ++ partialValueExprs,
-      pruned)
-    val union = Union(Seq(local, partial))
-    val unionOut = union.output
-    // value-slot OFFSET per flat position (duplicate specs are fine:
-    // the mapping is positional, never by equality)
-    val valueOffsets: Seq[Int] =
-      valSlotGroups.scanLeft(0)(_ + _.size).init
-    val valueIdx: Map[Int, Int] = {
-      var v = -1
-      flat.zipWithIndex.flatMap {
-        case (s, i) if !s.isInstanceOf[GroupKey] =>
-          v += 1; Some(i -> valueOffsets(v))
-        case _ => None
-      }.toMap
-    }
-    val mergeExprs: Seq[NamedExpression] =
-      agg.aggregateExpressions.zip(flat).zipWithIndex.map {
-        case (((orig, GroupKey(k))), _) =>
-          Alias(unionOut(k), orig.name)(exprId = orig.exprId)
-        case ((orig, s), i) =>
-          mergeExprFor(s, orig, unionOut, nKeys + valueIdx(i))
-            .getOrElse(return None)
-      }
-    logInfo(s"grouped time-band rewrite fired for '$table': " +
-      s"${groups.size} metadata groups + ${straddlers.size} straddler " +
-      "files scanned in-plan")
-    Some(Aggregate(unionOut.take(nKeys), mergeExprs, union))
-  }
-
-  /** TIME-BUCKET grouped hybrid (r17 verdict task 1): `GROUP BY
-    * tp_date` or `GROUP BY date_trunc(grain, tp_timestamp)`, optionally
-    * with partition-column keys and a tp_timestamp/tp_date band WHERE —
-    * THE reporting query of the reference's domain (its from/to view
-    * filters exist to feed it, cmd/connect.go:262-311), previously a
-    * full scan while every piece it needs existed. Files that are
-    * band-contained AND bucket-contained (manifest ts range inside one
-    * bucket — after time-ordered compaction most files are
-    * day-contained, reference compact.go:264-416 orders by
-    * tp_timestamp precisely so files don't straddle) contribute
-    * per-bucket metadata partials as LOCAL rows keyed by their bucket;
-    * straddlers keep the ORIGINAL grouping expressions over the
-    * restricted relation; the final GROUP BY over the union merges
-    * them — the grouped merge IS the bucket alignment, exactly as in
-    * [[rewriteBandGrouped]]. At 100 TB a daily report over a year
-    * reads kilobytes of metadata plus the boundary files.
-    */
-  /** [[unwrap]] variant for the bucket-grouped shape: additionally
-    * accepts Projects whose non-attribute entries are ONLY aliases of
-    * bucket-grain expressions — the optimizer's
-    * PullOutGroupingExpressions materializes `date_trunc(...)` as a
-    * `_groupingexpression` column in exactly such a Project. Arbitrary
-    * computed aliases still disqualify (an alias shadowing a real
-    * column name would otherwise let the rule serve the WRONG column's
-    * file stats). Returns the alias bindings so grouping attrs resolve
-    * back to their bucket expressions.
-    */
-  private def unwrapBucket(p: LogicalPlan): Option[
-      (LogicalRelation, Option[Expression], Map[ExprId, Expression])] =
-    p match {
-      case s: SubqueryAlias => unwrapBucket(s.child)
-      case v: View => unwrapBucket(v.child)
-      case f: Filter => unwrapBucket(f.child).map { case (lr, c, m) =>
-        (lr, Some(c.map(And(f.condition, _)).getOrElse(f.condition)), m)
-      }
-      case pr: Project
-          if pr.projectList.forall {
-            case _: AttributeReference => true
-            // only bucket-grain aliases pass, and only when the alias
-            // NAME doesn't shadow a column of the child (r18
-            // ADVICE-medium: `tp_date AS value` would otherwise let
-            // downstream NAME-keyed stats lookups serve the wrong
-            // column's stats; the optimizer's own pulled-out
-            // `_groupingexpression…` names can never collide)
-            case al: Alias => bucketValue(al.child).isDefined &&
-              !pr.child.output.exists(_.name == al.name)
-            case _ => false
-          } =>
-        unwrapBucket(pr.child).map { case (lr, c, m) =>
-          (lr, c, m ++ pr.projectList.collect {
-            case al: Alias => al.exprId -> al.child
-          })
-        }
-      case lr: LogicalRelation => Some((lr, None, Map.empty))
-      case _ => None
-    }
-
-  private def rewriteBucketGrouped(agg: Aggregate): Option[LogicalPlan] = {
-    val (lr, cond, aliasMap) =
-      unwrapBucket(agg.child).getOrElse(return None)
-    val (lake, table) = (lr.relation match {
-      case fs: HadoopFsRelation => fs.location match {
-        case z: ZoneMapFileIndex => z.owner
-        case _ => None
-      }
-      case _ => None
-    }).getOrElse(return None)
-    // grouping layout: resolve attrs through the pulled-out aliases,
-    // then require EXACTLY ONE bucket key and partition attrs otherwise
-    val grouping = agg.groupingExpressions
-    val resolved: Seq[Expression] = grouping.map {
-      case a: AttributeReference => aliasMap.getOrElse(a.exprId, a)
-      case e => e
-    }
-    // bucket-functional keys (1..n, all deriving from ONE containment
-    // grain): `GROUP BY tp_date`, `GROUP BY date_trunc('month', ts)`,
-    // and the multi-key layout report `GROUP BY year(ts), month(ts)` —
-    // containment proves on the FINEST grain present (one whose
-    // buckets refine every other key's), each key's value derived from
-    // that bucket's start instant
-    val bucketVals: Map[Int, (BucketGrain, Long => Any)] =
-      resolved.indices.flatMap(i =>
-        bucketValue(resolved(i)).map(i -> _)).toMap
-    if (bucketVals.isEmpty) return None
-    val grains = bucketVals.values.map(_._1).toSeq
-    val grain = grains.find(a =>
-      grains.forall(b => MetadataAggregateRule.refines(a, b)))
-      .getOrElse(return None) // e.g. week × month: no common refinement
-    val partAttrs: Seq[AttributeReference] = grouping.zipWithIndex
-      .filter(p => !bucketVals.contains(p._2))
-      .map(_._1 match {
-        case a: AttributeReference => a
-        case _ => return None
-      })
-    if (!partAttrs.forall(a =>
-      graft.lake.TpSchema.partitionCols.contains(a.name))) return None
-    if (!partAttrs.forall(a => a.dataType match {
-      case IntegerType | LongType | StringType => true
-      case _ => false
-    })) return None
-    // WHERE: a tp band set (folded date conjuncts and OR-of-bands
-    // included) + partition residual; no WHERE at all = the full
-    // range — bucket containment alone still makes most files
-    // metadata-servable
-    val (bands, partCond) = cond match {
-      case None => (Seq((Long.MinValue, Long.MaxValue)), None)
-      case Some(c) => splitBands(c) match {
-        case Some((bs, n, rest)) =>
-          (if (n > 0) bs
-           else Seq((Long.MinValue, Long.MaxValue)), rest)
-        case None => return None
-      }
-    }
-    if (bands.isEmpty) return None
-    val fileFilter: String => Boolean = partCond match {
-      case None => _ => true
-      case Some(pc) =>
-        partitionFilePredicate(lake, table, pc).getOrElse(return None)
-    }
-    // grouping position -> position among partAttrs
-    val partIdxOf: Map[Int, Int] = grouping.indices
-      .filter(!bucketVals.contains(_)).zipWithIndex.toMap
-
-    def keyIndex(e: Expression): Option[Int] = {
-      val i = grouping.indexWhere(_.semanticEquals(e))
-      if (i < 0) None else Some(i)
-    }
-    // an output DERIVED from group keys only — `cast(day_bucket AS
-    // date)`, `year(tp_date)` — is served by substituting the key into
-    // the expression (Literal on the metadata side, the union's key
-    // column on the straddler side). Deterministic, aggregate-free,
-    // evaluable, references ⊆ grouping attrs.
-    def derivedKey(al: Alias): Option[Spec] = {
-      val e = al.child
-      if (!e.deterministic) return None
-      // attrs are Unevaluable but get substituted (Literal / union
-      // column) before any eval — only OTHER unevaluable nodes
-      // (subqueries, grouping__id, ...) disqualify
-      if (e.find(x => x.isInstanceOf[AggregateExpression] ||
-        x.isInstanceOf[PlanExpression[_]] ||
-        (x.isInstanceOf[Unevaluable] &&
-          !x.isInstanceOf[AttributeReference])).isDefined) return None
-      if (e.references.isEmpty) return None
-      if (!e.references.toSeq.forall {
-        case a: AttributeReference => keyIndex(a).isDefined
-        case _ => false
-      }) return None
-      Some(GroupDerived(e))
-    }
-    val specs: Seq[Option[Spec]] = agg.aggregateExpressions.map {
-      case a: AttributeReference => keyIndex(a).map(GroupKey)
-      case al @ Alias(child, _) =>
-        keyIndex(child).map(GroupKey)
-          .orElse(classify(al)).orElse(derivedKey(al))
-      case e => classify(e)
-    }
-    if (specs.exists(s => s.isEmpty || s.get.isInstanceOf[Passthrough] ||
-      s.get.isInstanceOf[DistinctDates] || // day sets don't slot-merge
-      s.get.isInstanceOf[TopKCol])) // no band slot machinery for top-k
-      return None
-    val flat = specs.flatten
-    def isKeyish(s: Spec): Boolean =
-      s.isInstanceOf[GroupKey] || s.isInstanceOf[GroupDerived]
-    val valueSpecs = flat.filterNot(isKeyish)
-    val cols = valueSpecs.collect {
-      case CountCol(a) => a.name
-      case MinCol(a) => a.name
-      case MaxCol(a) => a.name
-      case SumCol(a) => a.name
-      case AvgCol(a) => a.name
-      case NdvCol(a) => a.name
-      case QuantileCol(a, _) => a.name
-    }.distinct
-    val rangeCols = valueSpecs.collect {
-      case MinCol(a) => a.name
-      case MaxCol(a) => a.name
-    }.toSet
-    val sumColsS = valueSpecs.collect {
-      case SumCol(a) => a.name
-      case AvgCol(a) => a.name
-    }.toSet
-    val ndvColsG = valueSpecs.collect { case NdvCol(a) => a.name }.toSet
-    val kllColsG =
-      valueSpecs.collect { case QuantileCol(a, _) => a.name }.toSet
-    if (!lake.hasData(session, table)) return None
-    val schema = lake.schemaOf(session, table)
-    if (!cols.forall(schema.fieldNames.contains)) return None
-    val (groups, straddlers, containedCount) = lake.timeBucketPartsGrouped(
-      session, table, bands, grain.idOf, cols, schema, rangeCols, sumColsS,
-      f => {
-        val pv = lake.partitionValues(lake.relOf(table, f))
-        partAttrs.map(a => pv.getOrElse(a.name, null))
-      }, fileFilter, ndvColsG, kllColsG)
-    if (containedCount <= 0) return None // hybrid buys nothing
-    val sumOnlyS = valueSpecs.collect { case SumCol(a) => a.name }.toSet
-    if (!groups.forall { case (_, p) =>
-      sumOnlyS.forall(c => p.sums.get(c).forall(_.isValidLong))
-    }) return None
-
-    def keyInternal(i: Int, bucket: Long, partVals: Seq[String]): Any =
-      bucketVals.get(i) match {
-        // each bucket key's value from the containment bucket's START
-        // instant — constant across the bucket by the refinement gate
-        case Some((_, valueOf)) => valueOf(grain.startUs(bucket))
-        case None =>
-          dirValueToInternal(partVals(partIdxOf(i)), grouping(i).dataType)
-      }
-    // driver-side eval of a key-derived output for one metadata group:
-    // keys become Literals, then one eval (resolved + deterministic +
-    // non-Unevaluable by derivedKey's gates; a throwing expr falls
-    // open through safely())
-    def evalDerived(e: Expression, bucket: Long,
-        partVals: Seq[String]): Any =
-      e.transform {
-        case a: AttributeReference if keyIndex(a).isDefined =>
-          val i = keyIndex(a).get
-          Literal(keyInternal(i, bucket, partVals), grouping(i).dataType)
-      }.eval(null)
-
-    // bucket id → key can be NON-injective for extract keys (two hour
-    // buckets on different days share one hour-of-day), in which case
-    // even a fully-contained answer still needs the merge aggregate —
-    // the direct emit below is only sound when every realized group
-    // maps to a distinct key tuple
-    lazy val injectiveKeys = {
-      val tuples = groups.map { case ((bucket, partVals), _) =>
-        grouping.indices.map(keyInternal(_, bucket, partVals))
-      }
-      tuples.distinct.size == tuples.size
-    }
-    if (straddlers.isEmpty && injectiveKeys) {
-      // fully contained: emit the final rows directly
-      val rows = groups.map { case ((bucket, partVals), parts) =>
-        InternalRow.fromSeq(flat.map {
-          case GroupKey(i) => keyInternal(i, bucket, partVals)
-          case GroupDerived(e) => evalDerived(e, bucket, partVals)
-          case s => metaFinalValue(parts, s)
-        })
-      }
-      logInfo(s"bucket-grouped time rewrite fired for '$table': fully " +
-        s"contained, ${groups.size} bucket groups from metadata")
-      return Some(LocalRelation(
-        agg.aggregateExpressions.map(_.toAttribute), rows))
-    }
-
-    // local side: key slots in grouping order, then value slots
-    val nKeys = grouping.size
-    val keySlots = grouping.zipWithIndex.map { case (g, i) =>
-      AttributeReference(s"_tbk_$i", g.dataType)()
-    }
-    val valSlotGroups: Seq[Seq[AttributeReference]] =
-      valueSpecs.zipWithIndex.map { case (sp, i) =>
-        slotTypesOf(sp).zipWithIndex.map { case (dt, j) =>
-          AttributeReference(s"_tbv_${i}_$j", dt)()
-        }
-      }
-    val valSlots = valSlotGroups.flatten
-    val localRows = groups.map { case ((bucket, partVals), parts) =>
-      InternalRow.fromSeq(
-        grouping.indices.map(keyInternal(_, bucket, partVals)) ++
-          valueSpecs.flatMap(s => metaSlotValues(parts, s)))
-    }
-    val local = LocalRelation(keySlots ++ valSlots, localRows)
-
-    // straddler side: the ORIGINAL grouping expressions (date_trunc
-    // evaluates row-level in-plan — straddler rows land in their true
-    // buckets, including the null bucket for null-ts rows) over the
-    // restricted relation, original Filter intact
-    val fsRel = lr.relation.asInstanceOf[HadoopFsRelation]
-    val straddlerIndex =
-      new org.apache.spark.sql.execution.datasources.InMemoryFileIndex(
-        session, straddlers.map(new org.apache.hadoop.fs.Path(_)),
-        Map("basePath" -> lake.tableDir(table)), None)
-    val straddlerRel = HadoopFsRelation(straddlerIndex,
-      fsRel.partitionSchema, fsRel.dataSchema, fsRel.bucketSpec,
-      fsRel.fileFormat, fsRel.options)(session)
-    val swappedChild = agg.child.transform {
-      case l: LogicalRelation if l eq lr => lr.copy(relation = straddlerRel)
-    }
-    val neededIds = (valueSpecs.collect {
-      case CountCol(a) => a; case MinCol(a) => a
-      case MaxCol(a) => a; case SumCol(a) => a; case AvgCol(a) => a
-      case NdvCol(a) => a; case QuantileCol(a, _) => a
-    }.map(_.exprId) ++
-      grouping.flatMap(_.references.map(_.exprId))).toSet
-    val needed = agg.child.output.filter(a => neededIds.contains(a.exprId))
-    val pruned =
-      if (needed.nonEmpty) Project(needed, swappedChild) else swappedChild
-    val partialKeys: Seq[NamedExpression] = grouping.zipWithIndex.map {
-      case (a: AttributeReference, _) => a
-      case (g, i) => Alias(g, s"_tbk_$i")()
-    }
-    val partialValueExprs: Seq[NamedExpression] =
-      valueSpecs.zip(valSlotGroups).flatMap { case (s, slots) =>
-        partialSlotExprs(s, slots).getOrElse(return None)
-      }
-    val partial = Aggregate(grouping,
-      partialKeys ++ partialValueExprs, pruned)
-    val union = Union(Seq(local, partial))
-    val unionOut = union.output
-    val valueOffsets: Seq[Int] =
-      valSlotGroups.scanLeft(0)(_ + _.size).init
-    val valueIdx: Map[Int, Int] = {
-      var v = -1
-      flat.zipWithIndex.flatMap {
-        case (s, i) if !isKeyish(s) =>
-          v += 1; Some(i -> valueOffsets(v))
-        case _ => None
-      }.toMap
-    }
-    val mergeExprs: Seq[NamedExpression] =
-      agg.aggregateExpressions.zip(flat).zipWithIndex.map {
-        case (((orig, GroupKey(k))), _) =>
-          Alias(unionOut(k), orig.name)(exprId = orig.exprId)
-        case (((orig, GroupDerived(e))), _) =>
-          // key-derived output: substitute the union's key columns
-          // into the expression (functionally determined by the keys)
-          Alias(e.transform {
-            case a: AttributeReference if keyIndex(a).isDefined =>
-              unionOut(keyIndex(a).get)
-          }, orig.name)(exprId = orig.exprId)
-        case ((orig, s), i) =>
-          mergeExprFor(s, orig, unionOut, nKeys + valueIdx(i))
-            .getOrElse(return None)
-      }
-    logInfo(s"bucket-grouped time rewrite fired for '$table': " +
-      s"${groups.size} bucket groups from metadata + " +
-      s"${straddlers.size} straddler files scanned in-plan")
-    Some(Aggregate(unionOut.take(nKeys), mergeExprs, union))
-  }
-
-  /** Partition-grouped rewrite: `GROUP BY tp_partition/tp_index/
-    * tp_year/tp_month` with the same aggregate family — one output row
-    * per partition group present in the manifest, group-key values
-    * taken from the files' directories (partitionBy strips the columns
-    * from the files, so directory truth IS column truth).
-    */
-  private def rewriteGrouped(agg: Aggregate): Option[LogicalPlan] = {
-    val (lr, cond) = unwrap(agg.child).getOrElse(return None)
-    val (lake, table) = (lr.relation match {
-      case fs: HadoopFsRelation => fs.location match {
-        case z: ZoneMapFileIndex => z.owner
-        case _ => None
-      }
-      case _ => None
-    }).getOrElse(return None)
-    val fileFilter: String => Boolean = cond match {
-      case None => _ => true
-      case Some(c) =>
-        partitionFilePredicate(lake, table, c) match {
-          case Some(p) => p
-          // not partition-only: try the GROUPED band hybrid
-          case None => return rewriteBandGrouped(agg, lr, lake, table, c)
-        }
-    }
-    val groupAttrs = agg.groupingExpressions
-      .map(_.asInstanceOf[AttributeReference])
-    // group-key types the directory string can be converted to exactly
-    if (!groupAttrs.forall(a => a.dataType match {
-      case IntegerType | LongType | StringType => true
-      case _ => false
-    })) return None
-    def keyIndex(a: AttributeReference): Option[Int] = {
-      val i = groupAttrs.indexWhere(_.exprId == a.exprId)
-      if (i < 0) None else Some(i)
-    }
-    val specs: Seq[Option[Spec]] = agg.aggregateExpressions.map {
-      case a: AttributeReference => keyIndex(a).map(GroupKey)
-      case Alias(a: AttributeReference, _) => keyIndex(a).map(GroupKey)
-      case e => classify(e)
-    }
-    if (specs.exists(_.isEmpty)) return None
-    val flat = specs.flatten
-    val cols = flat.collect {
-      case CountCol(a) => a.name
-      case MinCol(a) => a.name
-      case MaxCol(a) => a.name
-      case SumCol(a) => a.name
-      case AvgCol(a) => a.name
-      case NdvCol(a) => a.name
-      case QuantileCol(a, _) => a.name
-      case TopKCol(a, _) => a.name
-    }.distinct
-    val rangeCols = flat.collect {
-      case MinCol(a) => a.name
-      case MaxCol(a) => a.name
-    }.toSet
-    val sumCols = flat.collect {
-      case SumCol(a) => a.name
-      case AvgCol(a) => a.name
-    }.toSet
-    val ndvCols = flat.collect { case NdvCol(a) => a.name }.toSet
-    val kllCols = flat.collect { case QuantileCol(a, _) => a.name }.toSet
-    val mgCols = flat.collect { case TopKCol(a, _) => a.name }.toSet
-    val groups = lake.statsAggregateGroupedIfCovered(session, table,
-      groupAttrs.map(_.name), cols, rangeCols, sumCols, ndvCols,
-      fileFilter, kllCols, mgCols, countedCols(flat))
-      .getOrElse(return None)
-    // any group's sum past Long.MaxValue (or avg sum past 2^53):
-    // decline the whole rewrite
-    val sumOnly = flat.collect { case SumCol(a) => a.name }.toSet
-    val avgCols = flat.collect { case AvgCol(a) => a.name }.toSet
-    if (!groups.forall { case (_, parts) =>
-      sumOnly.forall(c => parts.sums.get(c).forall(_.isValidLong)) &&
-        avgCols.forall(c =>
-          parts.sums.get(c).forall(_.abs <= MaxExactAvgSum)) &&
-        // per-group top-k: every group's merged sketch must be exact
-        mgCols.forall(c => parts.mgBlobs.get(c).exists(b =>
-          graft.functions.TopKFns.isExact(
-            graft.functions.TopKFns.fromBlob(b))))
-    }) return None
-    // count(DISTINCT tp_date) per group: the manifest's day set keyed
-    // by the SAME partition-value projection, provable only when every
-    // (filtered) file is day-contained
-    val dayCounts: Option[Map[Seq[String], Long]] =
-      if (!flat.exists(_.isInstanceOf[DistinctDates])) None
-      else lake.distinctDayCounts(session, table,
-        f => {
-          val pv = lake.partitionValues(lake.relOf(table, f))
-          groupAttrs.map(a => pv.getOrElse(a.name, null))
-        }, fileFilter) match {
-          case None => return None
-          case Some(m) => Some(m)
-        }
-    val rows = groups.map { case (key, parts) =>
-      InternalRow.fromSeq(flat.map {
-        case GroupKey(i) =>
-          dirValueToInternal(key(i), groupAttrs(i).dataType)
-        case DistinctDates(_) =>
-          Long.box(dayCounts.get.getOrElse(key, 0L))
-        case CountStar => parts.nRows
-        case CountCol(a) => parts.counts.getOrElse(a.name, 0L)
-        case MinCol(a) =>
-          CatalystTypeConverters.convertToCatalyst(
-            parts.mins.get(a.name).orNull)
-        case MaxCol(a) =>
-          CatalystTypeConverters.convertToCatalyst(
-            parts.maxs.get(a.name).orNull)
-        case SumCol(a) =>
-          parts.sums.get(a.name).map(s => Long.box(s.toLong)).orNull
-        case AvgCol(a) =>
-          val n = parts.counts.getOrElse(a.name, 0L)
-          if (n == 0L) null
-          else parts.sums.get(a.name)
-            .map(s => Double.box(s.toDouble / n)).orNull
-        case NdvCol(a) => Long.box(parts.ndvs.getOrElse(a.name, 0L))
-        case QuantileCol(a, prob) =>
-          parts.kllBlobs.get(a.name)
-            .flatMap(b =>
-              graft.functions.QuantileFns.blobQuantile(b, prob))
-            .map(Double.box).orNull
-        case TopKCol(a, k) => graft.functions.TopKFns.topKInternal(
-          graft.functions.TopKFns.fromBlob(parts.mgBlobs(a.name)), k)
-        case Passthrough(v) => v
-      })
-    }
-    logInfo(s"metadata-aggregate GROUPED rewrite fired for lake table " +
-      s"'$table': ${groups.size} groups from the manifest+sidecar")
-    Some(LocalRelation(agg.aggregateExpressions.map(_.toAttribute), rows))
-  }
 }
 
 object MetadataAggregateRule {
-
-  private val DayUsC = 86400000000L
 
   /** Grain + UNDERLYING source attribute of a bucket expression — the
     * classification behind the class's `bucketGrain` and the rewrite
@@ -1737,10 +991,10 @@ object MetadataAggregateRule {
   private[lake] def bucketGrainOf(
       session: SparkSession, e: Expression)
       : Option[(BucketGrain, AttributeReference)] = {
-    if (!graft.lake.TpSchema.isUtcZone(
+    if (!TpSchema.isUtcZone(
       session.sessionState.conf.sessionLocalTimeZone)) return None
     def embeddedUtc(tz: Option[String]): Boolean =
-      tz.forall(graft.lake.TpSchema.isUtcZone)
+      tz.forall(TpSchema.isUtcZone)
     def months(fmt: org.apache.spark.unsafe.types.UTF8String)
         : Option[BucketGrain] =
       fmt.toString.toUpperCase(java.util.Locale.ROOT) match {
@@ -1752,18 +1006,18 @@ object MetadataAggregateRule {
       }
     e match {
       case a: AttributeReference
-          if a.name == graft.lake.TpSchema.Date &&
+          if a.name == TpSchema.Date &&
             a.dataType == org.apache.spark.sql.types.DateType =>
-        Some((FixedGrain(DayUsC), a))
+        Some((FixedGrain(DayUs), a))
       case TruncTimestamp(
           Literal(fmt: org.apache.spark.unsafe.types.UTF8String,
             StringType),
           ts: AttributeReference, tz)
-          if ts.name == graft.lake.TpSchema.Timestamp &&
+          if ts.name == TpSchema.Timestamp &&
             ts.dataType == org.apache.spark.sql.types.TimestampType &&
             embeddedUtc(tz) =>
         (fmt.toString.toUpperCase(java.util.Locale.ROOT) match {
-          case "DAY" | "DD" => Some(FixedGrain(DayUsC))
+          case "DAY" | "DD" => Some(FixedGrain(DayUs))
           case "HOUR" => Some(FixedGrain(3600000000L))
           case "MINUTE" => Some(FixedGrain(60000000L))
           case "SECOND" => Some(FixedGrain(1000000L))
@@ -1775,10 +1029,10 @@ object MetadataAggregateRule {
       // exactly floorDiv(micros, day), the same epoch-day key
       case Cast(ts: AttributeReference,
           org.apache.spark.sql.types.DateType, tz, _)
-          if ts.name == graft.lake.TpSchema.Timestamp &&
+          if ts.name == TpSchema.Timestamp &&
             ts.dataType == org.apache.spark.sql.types.TimestampType &&
             embeddedUtc(tz) =>
-        Some((FixedGrain(DayUsC), ts))
+        Some((FixedGrain(DayUs), ts))
       // `trunc(tp_date, 'MM'/'WEEK'/...)` — the monthly report over
       // the DATE column (DateType key; dates are tz-free, but the
       // file's date derivation still rides the UTC-writer convention,
@@ -1786,7 +1040,7 @@ object MetadataAggregateRule {
       case TruncDate(d: AttributeReference,
           Literal(fmt: org.apache.spark.unsafe.types.UTF8String,
             StringType))
-          if d.name == graft.lake.TpSchema.Date &&
+          if d.name == TpSchema.Date &&
             d.dataType == org.apache.spark.sql.types.DateType =>
         months(fmt).map(g => (g, d))
       case _ => None
@@ -1819,7 +1073,7 @@ object MetadataAggregateRule {
     * normalize to UTC.
     */
   private def embeddedUtcZone(tz: Option[String]): Boolean =
-    tz.forall(graft.lake.TpSchema.isUtcZone)
+    tz.forall(TpSchema.isUtcZone)
 
   /** tp_date attr, or cast(tp_timestamp AS date) under UTC — the two
     * date-typed spellings the extract functions get analyzed onto.
@@ -1827,12 +1081,12 @@ object MetadataAggregateRule {
   private def dateSrcOf(c: Expression): Option[AttributeReference] =
     c match {
       case a: AttributeReference
-          if a.name == graft.lake.TpSchema.Date &&
+          if a.name == TpSchema.Date &&
             a.dataType == org.apache.spark.sql.types.DateType =>
         Some(a)
       case Cast(ts: AttributeReference,
           org.apache.spark.sql.types.DateType, tz, _)
-          if ts.name == graft.lake.TpSchema.Timestamp &&
+          if ts.name == TpSchema.Timestamp &&
             ts.dataType == org.apache.spark.sql.types.TimestampType &&
             embeddedUtcZone(tz) =>
         Some(ts)
@@ -1848,7 +1102,7 @@ object MetadataAggregateRule {
   private[lake] def yearExtractSrcOf(
       session: SparkSession, e: Expression)
       : Option[AttributeReference] = {
-    if (!graft.lake.TpSchema.isUtcZone(
+    if (!TpSchema.isUtcZone(
       session.sessionState.conf.sessionLocalTimeZone)) return None
     e match {
       case Year(c) => dateSrcOf(c)
@@ -1859,20 +1113,20 @@ object MetadataAggregateRule {
   private[lake] def bucketValueOf(
       session: SparkSession, e: Expression)
       : Option[(BucketGrain, AttributeReference, Long => Any)] = {
-    if (!graft.lake.TpSchema.isUtcZone(
+    if (!TpSchema.isUtcZone(
       session.sessionState.conf.sessionLocalTimeZone)) return None
     def embeddedUtc(tz: Option[String]): Boolean = embeddedUtcZone(tz)
     def dateSrc(c: Expression): Option[AttributeReference] = dateSrcOf(c)
     def tsSrc(c: Expression): Option[AttributeReference] = c match {
       case ts: AttributeReference
-          if ts.name == graft.lake.TpSchema.Timestamp &&
+          if ts.name == TpSchema.Timestamp &&
             ts.dataType == org.apache.spark.sql.types.TimestampType =>
         Some(ts)
       case _ => None
     }
     def utcDate(us: Long): java.time.LocalDate =
-      java.time.LocalDate.ofEpochDay(Math.floorDiv(us, DayUsC))
-    val DayGrain = FixedGrain(DayUsC)
+      java.time.LocalDate.ofEpochDay(Math.floorDiv(us, DayUs))
+    val DayGrain = FixedGrain(DayUs)
     e match {
       case Year(c) => dateSrc(c).map(src =>
         (MonthsGrain(12), src, (us: Long) => utcDate(us).getYear))
@@ -1886,11 +1140,11 @@ object MetadataAggregateRule {
       // Spark dayofweek: 1=Sunday..7=Saturday; epoch day 0 = Thursday
       case DayOfWeek(c) => dateSrc(c).map(src =>
         (DayGrain, src, (us: Long) =>
-          (Math.floorMod(Math.floorDiv(us, DayUsC) + 4, 7) + 1).toInt))
+          (Math.floorMod(Math.floorDiv(us, DayUs) + 4, 7) + 1).toInt))
       // Spark weekday: 0=Monday..6=Sunday
       case WeekDay(c) => dateSrc(c).map(src =>
         (DayGrain, src, (us: Long) =>
-          Math.floorMod(Math.floorDiv(us, DayUsC) + 3, 7).toInt))
+          Math.floorMod(Math.floorDiv(us, DayUs) + 3, 7).toInt))
       case Hour(c, tz) if embeddedUtc(tz) => tsSrc(c).map(src =>
         (FixedGrain(3600000000L), src, (us: Long) =>
           Math.floorMod(Math.floorDiv(us, 3600000000L), 24).toInt))
@@ -1902,6 +1156,22 @@ object MetadataAggregateRule {
       }
     }
   }
+
+  /** A comparison's operator as ge/gt/le/lt/eq, restated for the
+    * `x OP literal` orientation when the literal sits on the left
+    * (`flip`). None for EqualNullSafe: `trunc(ts) <=> lit` is FALSE,
+    * not null, for a null ts, and no band expresses that.
+    */
+  private[lake] def bandOp(
+      cmp: BinaryComparison, flip: Boolean): Option[String] =
+    cmp match {
+      case _: GreaterThanOrEqual => Some(if (flip) "le" else "ge")
+      case _: GreaterThan => Some(if (flip) "lt" else "gt")
+      case _: LessThanOrEqual => Some(if (flip) "ge" else "le")
+      case _: LessThan => Some(if (flip) "gt" else "lt")
+      case _: EqualTo => Some("eq")
+      case _ => None
+    }
 
   /** Does every `a`-bucket lie entirely inside a single `b`-bucket?
     * When true, a key functional over `b`-buckets is derivable from an
@@ -1917,8 +1187,8 @@ object MetadataAggregateRule {
     (a, b) match {
       case (x, y) if x == y => true
       case (FixedGrain(w1), FixedGrain(w2)) => w2 % w1 == 0
-      case (FixedGrain(w), WeekGrain) => DayUsC % w == 0
-      case (FixedGrain(w), MonthsGrain(_)) => DayUsC % w == 0
+      case (FixedGrain(w), WeekGrain) => DayUs % w == 0
+      case (FixedGrain(w), MonthsGrain(_)) => DayUs % w == 0
       case (MonthsGrain(m1), MonthsGrain(m2)) => m2 % m1 == 0
       case _ => false
     }
@@ -1947,7 +1217,7 @@ object MetadataAggregateRule {
         dt: org.apache.spark.sql.types.DataType, id: Long): Any =
       dt match {
         case org.apache.spark.sql.types.DateType =>
-          Math.floorDiv(startUs(id), DayUsC).toInt
+          Math.floorDiv(startUs(id), DayUs).toInt
         case _ => startUs(id)
       }
   }
@@ -1966,8 +1236,8 @@ object MetadataAggregateRule {
     */
   private[lake] case object WeekGrain extends BucketGrain {
     override def idOf(us: Long): Long =
-      Math.floorDiv(Math.floorDiv(us, DayUsC) + 3, 7)
-    override def startUs(id: Long): Long = (7 * id - 3) * DayUsC
+      Math.floorDiv(Math.floorDiv(us, DayUs) + 3, 7)
+    override def startUs(id: Long): Long = (7 * id - 3) * DayUs
   }
 
   /** MONTH/QUARTER/YEAR as `monthsPer` ∈ {1, 3, 12}: bucket id =
@@ -1979,7 +1249,7 @@ object MetadataAggregateRule {
   private[lake] final case class MonthsGrain(monthsPer: Int)
       extends BucketGrain {
     override def idOf(us: Long): Long = {
-      val d = java.time.LocalDate.ofEpochDay(Math.floorDiv(us, DayUsC))
+      val d = java.time.LocalDate.ofEpochDay(Math.floorDiv(us, DayUs))
       Math.floorDiv(d.getYear.toLong * 12 + (d.getMonthValue - 1),
         monthsPer.toLong)
     }
@@ -1987,36 +1257,63 @@ object MetadataAggregateRule {
       val months = id * monthsPer
       val y = Math.floorDiv(months, 12L).toInt
       val m = Math.floorMod(months, 12L).toInt + 1
-      java.time.LocalDate.of(y, m, 1).toEpochDay * DayUsC
+      java.time.LocalDate.of(y, m, 1).toEpochDay * DayUs
     }
   }
 
+  /** One aggregate shape the rule can serve — everything the probe and
+    * the emit step need, found without reading metadata. `keys` holds
+    * one entry per grouping expression; `grain` is the finest bucket
+    * grain when a key is a time bucket; `bands` is the WHERE's disjoint
+    * band set (None: no band); `fileFilter` evaluates the partition-only
+    * rest of the WHERE per file directory.
+    */
+  private final case class Shape(
+      agg: Aggregate, lr: LogicalRelation, lake: Lake, table: String,
+      keys: Seq[Key], grain: Option[BucketGrain],
+      bands: Option[Seq[(Long, Long)]],
+      fileFilter: String => Boolean,
+      specs: Seq[Spec]) {
+    /** A band or a bucket key: files sort by their manifest time range,
+      * and straddlers may scan in-plan.
+      */
+    def timed: Boolean = bands.isDefined || grain.isDefined
+  }
+
+  private sealed trait Key
+  /** A physical partition column: its value is the file's directory. */
+  private final case class PartKey(a: AttributeReference) extends Key
+  /** A time bucket of `grain`; `valueOf` maps any instant inside a
+    * bucket to the key's Catalyst value.
+    */
+  private final case class BucketKey(grain: BucketGrain,
+      valueOf: Long => Any) extends Key
+
+  /** Partition-column types a directory string converts to exactly. */
+  private def dirTyped(dt: org.apache.spark.sql.types.DataType): Boolean =
+    dt match {
+      case IntegerType | LongType | StringType => true
+      case _ => false
+    }
+
   private sealed trait Spec
+  /** An aggregate over one column. */
+  private sealed trait ColSpec extends Spec { def a: AttributeReference }
   private case object CountStar extends Spec
-  private final case class CountCol(a: AttributeReference) extends Spec
-  private final case class MinCol(a: AttributeReference) extends Spec
-  private final case class MaxCol(a: AttributeReference) extends Spec
-  private final case class SumCol(a: AttributeReference) extends Spec
-  private final case class AvgCol(a: AttributeReference) extends Spec
-  private final case class NdvCol(a: AttributeReference) extends Spec
+  private final case class CountCol(a: AttributeReference) extends ColSpec
+  private final case class MinCol(a: AttributeReference) extends ColSpec
+  private final case class MaxCol(a: AttributeReference) extends ColSpec
+  private final case class SumCol(a: AttributeReference) extends ColSpec
+  private final case class AvgCol(a: AttributeReference) extends ColSpec
+  private final case class NdvCol(a: AttributeReference) extends ColSpec
   private final case class QuantileCol(
-      a: AttributeReference, p: Double) extends Spec
-
-  /** Columns whose `count` the rewrite reads (count and avg outputs);
-    * a column only min/max'd needs no null counts.
+      a: AttributeReference, p: Double) extends ColSpec
+  /** `graft_topk(c, k)` — the frequent-items "top talkers" report,
+    * served by merging the sidecar's per-file sketches when the merge
+    * stays provably EXACT (no eviction anywhere — TopKFns.isExact).
     */
-  private def countedCols(specs: Seq[Spec]): Set[String] =
-    specs.collect {
-      case CountCol(a) => a.name
-      case AvgCol(a) => a.name
-    }.toSet
-
-  /** Exactness bound for serving `avg`: with |exact sum| <= 2^53 the
-    * BigInt→double conversion is lossless and any per-row double
-    * accumulation of the same-signed values is too, so the metadata
-    * quotient bit-matches a scan's. Past it the rule declines.
-    */
-  private val MaxExactAvgSum: BigInt = BigInt(1) << 53
+  private final case class TopKCol(a: AttributeReference, k: Int)
+      extends ColSpec
   private final case class Passthrough(value: Any) extends Spec
   private final case class GroupKey(i: Int) extends Spec
   /** `count(DISTINCT tp_date)` answered from the manifest's per-file
@@ -2028,12 +1325,13 @@ object MetadataAggregateRule {
     * bucket, `year(tp_date)`, ...): served by key substitution.
     */
   private final case class GroupDerived(e: Expression) extends Spec
-  /** `graft_topk(c, k)` — the frequent-items "top talkers" report,
-    * served by merging the sidecar's per-file sketches when the merge
-    * stays provably EXACT (no eviction anywhere — TopKFns.isExact).
+
+  /** Exactness bound for serving `avg`: with |exact sum| <= 2^53 the
+    * BigInt→double conversion is lossless and any per-row double
+    * accumulation of the same-signed values is too, so the metadata
+    * quotient bit-matches a scan's. Past it the rule declines.
     */
-  private final case class TopKCol(a: AttributeReference, k: Int)
-      extends Spec
+  private val MaxExactAvgSum: BigInt = BigInt(1) << 53
 
   /** Idempotent per-session install into
     * `spark.experimental.extraOptimizations` — the embedded/library
@@ -2080,8 +1378,6 @@ final case class BucketFilterBandRule(session: SparkSession)
   extends Rule[LogicalPlan] {
 
   import MetadataAggregateRule._
-
-  private val DayUs = 86400000000L
 
   override def apply(plan: LogicalPlan): LogicalPlan = plan.transform {
     case f: Filter =>
@@ -2143,16 +1439,7 @@ final case class BucketFilterBandRule(session: SparkSession)
         if (y < 0 || y > 9999) return None
         (MonthsGrain(12), src0, y.toLong, true)
     }
-    val op = cmp match {
-      case _: GreaterThanOrEqual => if (flip) "le" else "ge"
-      case _: GreaterThan => if (flip) "lt" else "gt"
-      case _: LessThanOrEqual => if (flip) "ge" else "le"
-      case _: LessThan => if (flip) "gt" else "lt"
-      case _: EqualTo => "eq"
-      // EqualNullSafe: `trunc(ts) <=> lit` is FALSE (not null) for a
-      // null ts — a band comparison can't express that; decline
-      case _ => return None
-    }
+    val op = bandOp(cmp, flip).getOrElse(return None)
     val ceil = if (aligned) id else id + 1
     // bounds restated in the SOURCE attribute's units; bucket starts
     // are day multiples for DateType sources, and an exclusive micros
@@ -2183,4 +1470,3 @@ final case class BucketFilterBandRule(session: SparkSession)
     Some(folded)
   }
 }
-

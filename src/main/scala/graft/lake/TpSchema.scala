@@ -33,6 +33,11 @@ object TpSchema {
   /** Physical partition key, in directory order. */
   val partitionCols: Seq[String] = Seq(Partition, Index, Year, Month)
 
+  /** Micros in one day: `tp_date` is `tp_timestamp` floored to a UTC
+    * day, so epoch day d spans `[d·DayUs, (d+1)·DayUs)`.
+    */
+  val DayUs: Long = 86400000000L
+
   /** True when `tz` denotes exactly UTC under `ZoneId` normalization —
     * "UTC", "Etc/UTC", "GMT", "Z", "+00:00" all qualify; any zone with
     * a nonzero offset or DST history does not. The metadata layers
